@@ -12,10 +12,15 @@ import graft.spatial.{functions => G}
  * print 5 rows each.
  *
  * Run: sbt "runMain graft.spatial.Example [dataDir]"
+ * (`dataDir` defaults to the vendored fixtures, relative to the repo root;
+ * pass the reference checkout's `data/` to run over its own files).
  */
 object Example {
+  /** The vendored reference fixtures (tools/gen_reference_fixtures.py). */
+  val FixturesDir = "src/test/resources/graft/reference_data"
+
   def main(args: Array[String]): Unit = {
-    val dataDir = args.headOption.getOrElse("/root/reference/data")
+    val dataDir = args.headOption.getOrElse(FixturesDir)
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
       .appName("graft-spatial-example")

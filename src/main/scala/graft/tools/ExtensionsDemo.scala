@@ -63,7 +63,7 @@ object ExtensionsDemo {
     // and over a view that stripped the metadata — folds to a plan-time
     // constant (no per-row header decode in the optimized plan)
     val geo = graft.spatial.GeoIO.readGeoParquet(
-      spark, "/root/reference/data/data-point-encoding_wkb.parquet")
+      spark, s"${graft.spatial.Example.FixturesDir}/data-point-encoding_wkb.parquet")
     geo.select(col("col"),
         when(col("col") >= 0, col("geometry")).otherwise(col("geometry")).as("g"))
       .createOrReplaceTempView("geo_view")

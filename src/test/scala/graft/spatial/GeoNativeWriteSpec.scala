@@ -26,48 +26,54 @@ class GeoNativeWriteSpec extends AnyFunSuite {
     "multipolygon" -> "MultiPolygon")
 
   test("native write round-trips every geometry class (WKT-identical)") {
-    for ((fix, gclass) <- classes) {
-      val src = GeoIO.readGeoParquet(spark,
-        s"/root/reference/data/data-$fix-encoding_wkb.parquet")
-      val out = s"/tmp/graft_native_write_$fix"
-      GeoIO.writeGeoParquetNative(src, out, Map("geometry" -> gclass))
-      val back = GeoIO.readGeoParquet(spark, out)
-      val a = src.select(col("col"), G.st_astext(col("geometry")).as("wkt"))
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val b = back.select(col("col"), G.st_astext(col("geometry")).as("wkt"))
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(a == b, s"class=$gclass")
+    ReferenceFixtures.foreachDir { dataDir =>
+      for ((fix, gclass) <- classes) {
+        val src = GeoIO.readGeoParquet(spark,
+          s"$dataDir/data-$fix-encoding_wkb.parquet")
+        val out = s"/tmp/graft_native_write_$fix"
+        GeoIO.writeGeoParquetNative(src, out, Map("geometry" -> gclass))
+        val back = GeoIO.readGeoParquet(spark, out)
+        val a = src.select(col("col"), G.st_astext(col("geometry")).as("wkt"))
+          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        val b = back.select(col("col"), G.st_astext(col("geometry")).as("wkt"))
+          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        assert(a == b, s"class=$gclass")
+      }
     }
   }
 
   test("written native schema matches the reference native fixtures") {
-    for ((fix, gclass) <- classes) {
-      val out = s"/tmp/graft_native_write_schema_$fix"
-      val src = GeoIO.readGeoParquet(spark,
-        s"/root/reference/data/data-$fix-encoding_wkb.parquet")
-      GeoIO.writeGeoParquetNative(src, out, Map("geometry" -> gclass))
-      val ours = spark.read.parquet(out).schema("geometry").dataType.catalogString
-      val ref = spark.read.parquet(s"/root/reference/data/data-$fix-encoding_native.parquet")
-        .schema("geometry").dataType.catalogString
-      assert(ours == ref, s"class=$gclass ours=$ours ref=$ref")
+    ReferenceFixtures.foreachDir { dataDir =>
+      for ((fix, gclass) <- classes) {
+        val out = s"/tmp/graft_native_write_schema_$fix"
+        val src = GeoIO.readGeoParquet(spark,
+          s"$dataDir/data-$fix-encoding_wkb.parquet")
+        GeoIO.writeGeoParquetNative(src, out, Map("geometry" -> gclass))
+        val ours = spark.read.parquet(out).schema("geometry").dataType.catalogString
+        val ref = spark.read.parquet(s"$dataDir/data-$fix-encoding_native.parquet")
+          .schema("geometry").dataType.catalogString
+        assert(ours == ref, s"class=$gclass ours=$ours ref=$ref")
+      }
     }
   }
 
   test("interleaved native write round-trips (XY flat-coord layout)") {
-    for ((fix, gclass) <- classes) {
-      val src = GeoIO.readGeoParquet(spark,
-        s"/root/reference/data/data-$fix-encoding_wkb.parquet")
-      val out = s"/tmp/graft_native_write_il_$fix"
-      GeoIO.writeGeoParquetNative(src, out, Map("geometry" -> gclass), interleaved = true)
-      // coords are array<double> at the innermost level, not struct
-      val dt = spark.read.parquet(out).schema("geometry").dataType.catalogString
-      assert(dt.contains("array<double>") && !dt.contains("struct"), s"$gclass: $dt")
-      val back = GeoIO.readGeoParquet(spark, out)
-      val a = src.select(col("col"), G.st_astext(col("geometry")).as("wkt"))
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val b = back.select(col("col"), G.st_astext(col("geometry")).as("wkt"))
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(a == b, s"class=$gclass")
+    ReferenceFixtures.foreachDir { dataDir =>
+      for ((fix, gclass) <- classes) {
+        val src = GeoIO.readGeoParquet(spark,
+          s"$dataDir/data-$fix-encoding_wkb.parquet")
+        val out = s"/tmp/graft_native_write_il_$fix"
+        GeoIO.writeGeoParquetNative(src, out, Map("geometry" -> gclass), interleaved = true)
+        // coords are array<double> at the innermost level, not struct
+        val dt = spark.read.parquet(out).schema("geometry").dataType.catalogString
+        assert(dt.contains("array<double>") && !dt.contains("struct"), s"$gclass: $dt")
+        val back = GeoIO.readGeoParquet(spark, out)
+        val a = src.select(col("col"), G.st_astext(col("geometry")).as("wkt"))
+          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        val b = back.select(col("col"), G.st_astext(col("geometry")).as("wkt"))
+          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        assert(a == b, s"class=$gclass")
+      }
     }
   }
 

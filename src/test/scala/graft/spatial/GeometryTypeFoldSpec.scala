@@ -32,44 +32,50 @@ class GeometryTypeFoldSpec extends AnyFunSuite {
   }
 
   test("folds to a plan-time constant on a metadata-bearing native column") {
-    val df = GeoIO.readGeoParquet(spark, "/root/reference/data/data-point-encoding_wkb.parquet")
-    val q = df.select(G.st_geometrytype(col("geometry")).as("t"))
-    val expected = q.collect().map(_.getString(0)).toSeq
-    val (plan, run) = folded(q)
-    assert(plan.contains("ST_Point"), plan)          // the literal is in the plan
-    assert(!plan.contains("st_geometrytype"), plan)  // the per-row decode is gone
-    assert(run.collect().map(_.getString(0)).toSeq == expected)
+    ReferenceFixtures.foreachDir { dataDir =>
+      val df = GeoIO.readGeoParquet(spark, s"$dataDir/data-point-encoding_wkb.parquet")
+      val q = df.select(G.st_geometrytype(col("geometry")).as("t"))
+      val expected = q.collect().map(_.getString(0)).toSeq
+      val (plan, run) = folded(q)
+      assert(plan.contains("ST_Point"), plan)          // the literal is in the plan
+      assert(!plan.contains("st_geometrytype"), plan)  // the per-row decode is gone
+      assert(run.collect().map(_.getString(0)).toSeq == expected)
+    }
   }
 
   test("re-derives the class through a metadata-stripping view (no footer re-read)") {
     G.register(spark)
-    val df = GeoIO.readGeoParquet(spark, "/root/reference/data/data-point-encoding_wkb.parquet")
-    // CASE strips field metadata: the Alias no longer carries geometryType
-    val transformed = df.select(col("col"),
-      when(col("col") >= 0, col("geometry")).otherwise(col("geometry")).as("g"))
-    assert(!transformed.schema("g").metadata.contains("geometryType"))
-    transformed.createOrReplaceTempView("geo_stripped_view")
-    val q = spark.sql("SELECT ST_GeometryType(g) AS t FROM geo_stripped_view")
-    val expected = q.collect().map(r => Option(r.getString(0))).toSeq
-    val (plan, run) = folded(q)
-    assert(plan.contains("ST_Point") && !plan.contains("st_geometrytype"), plan)
-    // identical to the per-row decode (the fixture includes a null geometry)
-    assert(run.collect().map(r => Option(r.getString(0))).toSeq == expected)
-    assert(expected.flatten.toSet == Set("ST_Point"))
+    ReferenceFixtures.foreachDir { dataDir =>
+      val df = GeoIO.readGeoParquet(spark, s"$dataDir/data-point-encoding_wkb.parquet")
+      // CASE strips field metadata: the Alias no longer carries geometryType
+      val transformed = df.select(col("col"),
+        when(col("col") >= 0, col("geometry")).otherwise(col("geometry")).as("g"))
+      assert(!transformed.schema("g").metadata.contains("geometryType"))
+      transformed.createOrReplaceTempView("geo_stripped_view")
+      val q = spark.sql("SELECT ST_GeometryType(g) AS t FROM geo_stripped_view")
+      val expected = q.collect().map(r => Option(r.getString(0))).toSeq
+      val (plan, run) = folded(q)
+      assert(plan.contains("ST_Point") && !plan.contains("st_geometrytype"), plan)
+      // identical to the per-row decode (the fixture includes a null geometry)
+      assert(run.collect().map(r => Option(r.getString(0))).toSeq == expected)
+      assert(expected.flatten.toSet == Set("ST_Point"))
+    }
   }
 
   test("preserves null semantics when the wrapped column can be null") {
-    val df = GeoIO.readGeoParquet(spark, "/root/reference/data/data-point-encoding_wkb.parquet")
-    // CASE with no ELSE: odd rows become null geometries
-    val sparse = df.select(col("col"),
-      when(col("col") % 2 === 0, col("geometry")).as("g"))
-    val q = sparse.select(col("col"), G.st_geometrytype(col("g")).as("t"))
-    val expected = q.collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-    val (plan, run) = folded(q)
-    assert(plan.contains("ST_Point"), plan)
-    val got = run.collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-    assert(got == expected)
-    assert(got.values.exists(_.isEmpty) && got.values.exists(_.contains("ST_Point")), got)
+    ReferenceFixtures.foreachDir { dataDir =>
+      val df = GeoIO.readGeoParquet(spark, s"$dataDir/data-point-encoding_wkb.parquet")
+      // CASE with no ELSE: odd rows become null geometries
+      val sparse = df.select(col("col"),
+        when(col("col") % 2 === 0, col("geometry")).as("g"))
+      val q = sparse.select(col("col"), G.st_geometrytype(col("g")).as("t"))
+      val expected = q.collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+      val (plan, run) = folded(q)
+      assert(plan.contains("ST_Point"), plan)
+      val got = run.collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+      assert(got == expected)
+      assert(got.values.exists(_.isEmpty) && got.values.exists(_.contains("ST_Point")), got)
+    }
   }
 
   test("does not fold without metadata or known lineage") {

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.spatial.{functions => G}
 
-/** End-to-end Spark tests of the ST_* surface over the reference's own
-  * fixture files (read-only at /root/reference/data). */
+/** End-to-end Spark tests of the ST_* surface over the reference fixture
+  * content: the vendored copy, plus the reference checkout's own files
+  * wherever it is present ([[ReferenceFixtures]]). */
 class SparkSpatialSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
@@ -23,76 +24,88 @@ class SparkSpatialSpec extends AnyFunSuite {
     s
   }
 
-  private val dataDir = "/root/reference/data"
-
   private def wkts(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.select(G.st_astext(col("geometry")).as("wkt"))
       .collect().map(r => if (r.isNullAt(0)) null else r.getString(0)).toSeq
 
   test("geo metadata parse") {
-    val cols = GeoIO.readGeoMetadata(spark, s"$dataDir/data-point-encoding_native.parquet")
-    assert(cols == Seq(GeoIO.GeoColumn("geometry", "point", Seq("Point"))))
-    val wkb = GeoIO.readGeoMetadata(spark, s"$dataDir/data-multipolygon-encoding_wkb.parquet")
-    assert(wkb == Seq(GeoIO.GeoColumn("geometry", "WKB", Seq("MultiPolygon"))))
+    ReferenceFixtures.foreachDir { dataDir =>
+      val cols = GeoIO.readGeoMetadata(spark, s"$dataDir/data-point-encoding_native.parquet")
+      assert(cols == Seq(GeoIO.GeoColumn("geometry", "point", Seq("Point"))))
+      val wkb = GeoIO.readGeoMetadata(spark, s"$dataDir/data-multipolygon-encoding_wkb.parquet")
+      assert(wkb == Seq(GeoIO.GeoColumn("geometry", "WKB", Seq("MultiPolygon"))))
+    }
   }
 
   test("point fixture native → ST_AsText matches reference content (generate_test_data.py:65-70)") {
-    val df = GeoIO.readGeoParquet(spark, s"$dataDir/data-point-encoding_native.parquet")
-    assert(wkts(df) == Seq("POINT (30.0 10.0)", "POINT EMPTY", null, "POINT (40.0 40.0)"))
+    ReferenceFixtures.foreachDir { dataDir =>
+      val df = GeoIO.readGeoParquet(spark, s"$dataDir/data-point-encoding_native.parquet")
+      assert(wkts(df) == Seq("POINT (30.0 10.0)", "POINT EMPTY", null, "POINT (40.0 40.0)"))
+    }
   }
 
   test("all six geometry classes: native and wkb encodings agree") {
-    for (cls <- Seq("point", "linestring", "polygon", "multipoint", "multilinestring", "multipolygon")) {
-      val native = GeoIO.readGeoParquet(spark, s"$dataDir/data-$cls-encoding_native.parquet")
-      val wkb = GeoIO.readGeoParquet(spark, s"$dataDir/data-$cls-encoding_wkb.parquet")
-      assert(wkts(native) == wkts(wkb), s"class $cls")
+    ReferenceFixtures.foreachDir { dataDir =>
+      for (cls <- Seq("point", "linestring", "polygon", "multipoint", "multilinestring", "multipolygon")) {
+        val native = GeoIO.readGeoParquet(spark, s"$dataDir/data-$cls-encoding_native.parquet")
+        val wkb = GeoIO.readGeoParquet(spark, s"$dataDir/data-$cls-encoding_wkb.parquet")
+        assert(wkts(native) == wkts(wkb), s"class $cls")
+      }
     }
   }
 
   test("wkt csv fixtures roundtrip through ST_GeomFromText") {
-    for (cls <- Seq("point", "linestring", "polygon", "multipoint", "multilinestring", "multipolygon")) {
-      val csv = spark.read.option("header", "true").csv(s"$dataDir/data-$cls-wkt.csv")
-      val viaText = csv.select(G.st_astext(G.st_geomfromtext(col("geometry"))).as("wkt"))
-        .collect().map(r => if (r.isNullAt(0)) null else r.getString(0)).toSeq
-      val native = GeoIO.readGeoParquet(spark, s"$dataDir/data-$cls-encoding_native.parquet")
-      assert(viaText == wkts(native), s"class $cls")
+    ReferenceFixtures.foreachDir { dataDir =>
+      for (cls <- Seq("point", "linestring", "polygon", "multipoint", "multilinestring", "multipolygon")) {
+        val csv = spark.read.option("header", "true").csv(s"$dataDir/data-$cls-wkt.csv")
+        val viaText = csv.select(G.st_astext(G.st_geomfromtext(col("geometry"))).as("wkt"))
+          .collect().map(r => if (r.isNullAt(0)) null else r.getString(0)).toSeq
+        val native = GeoIO.readGeoParquet(spark, s"$dataDir/data-$cls-encoding_native.parquet")
+        assert(viaText == wkts(native), s"class $cls")
+      }
     }
   }
 
   test("ST_GeometryType over wkb fixture (examples/main.rs query 1 shape)") {
-    val df = GeoIO.readGeoParquet(spark, s"$dataDir/data-multipolygon-encoding_wkb.parquet")
-    val types = df.select(G.st_geometrytype(col("geometry"))).collect()
-      .map(r => if (r.isNullAt(0)) null else r.getString(0)).toSeq
-    assert(types.toSet == Set("ST_MultiPolygon", null))
+    ReferenceFixtures.foreachDir { dataDir =>
+      val df = GeoIO.readGeoParquet(spark, s"$dataDir/data-multipolygon-encoding_wkb.parquet")
+      val types = df.select(G.st_geometrytype(col("geometry"))).collect()
+        .map(r => if (r.isNullAt(0)) null else r.getString(0)).toSeq
+      assert(types.toSet == Set("ST_MultiPolygon", null))
+    }
   }
 
   test("ST_Envelope + ST_Extent over fixtures (examples/main.rs:50-61)") {
-    val df = GeoIO.readGeoParquet(spark, s"$dataDir/data-linestring-encoding_native.parquet")
-    val env = df.select(G.st_astext(G.st_envelope(col("geometry"))).as("e"))
-      .collect().map(r => if (r.isNullAt(0)) null else r.getString(0)).toSeq
-    assert(env == Seq(
-      "POLYGON ((10.0 10.0,40.0 10.0,40.0 40.0,10.0 40.0,10.0 10.0))",
-      "POLYGON EMPTY", null))
-    val ext = df.agg(G.st_extent(col("geometry")).as("extent")).selectExpr(
-      "extent.xmin", "extent.ymin", "extent.xmax", "extent.ymax").head()
-    assert(ext.getDouble(0) == 10.0 && ext.getDouble(1) == 10.0 &&
-      ext.getDouble(2) == 40.0 && ext.getDouble(3) == 40.0)
+    ReferenceFixtures.foreachDir { dataDir =>
+      val df = GeoIO.readGeoParquet(spark, s"$dataDir/data-linestring-encoding_native.parquet")
+      val env = df.select(G.st_astext(G.st_envelope(col("geometry"))).as("e"))
+        .collect().map(r => if (r.isNullAt(0)) null else r.getString(0)).toSeq
+      assert(env == Seq(
+        "POLYGON ((10.0 10.0,40.0 10.0,40.0 40.0,10.0 40.0,10.0 10.0))",
+        "POLYGON EMPTY", null))
+      val ext = df.agg(G.st_extent(col("geometry")).as("extent")).selectExpr(
+        "extent.xmin", "extent.ymin", "extent.xmax", "extent.ymax").head()
+      assert(ext.getDouble(0) == 10.0 && ext.getDouble(1) == 10.0 &&
+        ext.getDouble(2) == 40.0 && ext.getDouble(3) == 40.0)
+    }
   }
 
   test("SQL registration: full query through spark.sql") {
-    GeoIO.readGeoParquet(spark, s"$dataDir/data-polygon-encoding_native.parquet")
-      .createOrReplaceTempView("polys")
-    val rows = spark.sql(
-      """SELECT ST_AsText(ST_Envelope(geometry)) AS env,
-        |       ST_GeometryType(geometry) AS gt,
-        |       ST_Area(geometry) AS area,
-        |       ST_NPoints(geometry) AS np
-        |FROM polys WHERE geometry IS NOT NULL""".stripMargin).collect()
-    assert(rows.length == 3)
-    assert(rows.map(_.getString(1)).toSet == Set("ST_Polygon"))
-    // udaf form of extent
-    val ext = spark.sql("SELECT st_extent(geometry) AS e FROM polys").head().getStruct(0)
-    assert(!ext.isNullAt(0))
+    ReferenceFixtures.foreachDir { dataDir =>
+      GeoIO.readGeoParquet(spark, s"$dataDir/data-polygon-encoding_native.parquet")
+        .createOrReplaceTempView("polys")
+      val rows = spark.sql(
+        """SELECT ST_AsText(ST_Envelope(geometry)) AS env,
+          |       ST_GeometryType(geometry) AS gt,
+          |       ST_Area(geometry) AS area,
+          |       ST_NPoints(geometry) AS np
+          |FROM polys WHERE geometry IS NOT NULL""".stripMargin).collect()
+      assert(rows.length == 3)
+      assert(rows.map(_.getString(1)).toSet == Set("ST_Polygon"))
+      // udaf form of extent
+      val ext = spark.sql("SELECT st_extent(geometry) AS e FROM polys").head().getStruct(0)
+      assert(!ext.isNullAt(0))
+    }
   }
 
   test("predicates & measures through SQL") {
@@ -114,16 +127,18 @@ class SparkSpatialSpec extends AnyFunSuite {
   }
 
   test("geoparquet write roundtrip preserves geometry metadata + content") {
-    val df = GeoIO.readGeoParquet(spark, s"$dataDir/data-polygon-encoding_native.parquet")
-    val out = "/tmp/graft_geo_roundtrip"
-    GeoIO.writeGeoParquet(df, out, Map("geometry" -> "Polygon"))
-    val back = spark.read.parquet(out)
-    assert(back.schema("geometry").metadata.getString("encoding") == "WKB")
-    assert(back.schema("geometry").metadata.getString("geometryType") == "Polygon")
-    val a = wkts(df).map(Option(_).getOrElse("")).sorted
-    val b = back.select(G.st_astext(col("geometry")).as("w"))
-      .collect().map(r => if (r.isNullAt(0)) "" else r.getString(0)).toSeq.sorted
-    assert(a == b)
+    ReferenceFixtures.foreachDir { dataDir =>
+      val df = GeoIO.readGeoParquet(spark, s"$dataDir/data-polygon-encoding_native.parquet")
+      val out = "/tmp/graft_geo_roundtrip"
+      GeoIO.writeGeoParquet(df, out, Map("geometry" -> "Polygon"))
+      val back = spark.read.parquet(out)
+      assert(back.schema("geometry").metadata.getString("encoding") == "WKB")
+      assert(back.schema("geometry").metadata.getString("geometryType") == "Polygon")
+      val a = wkts(df).map(Option(_).getOrElse("")).sorted
+      val b = back.select(G.st_astext(col("geometry")).as("w"))
+        .collect().map(r => if (r.isNullAt(0)) "" else r.getString(0)).toSeq.sorted
+      assert(a == b)
+    }
   }
 
   test("doGenCode paths compile under CODEGEN_ONLY (no fallback)") {
