@@ -153,14 +153,14 @@ object Queries {
   /** Layout-artifact dir shared between q128_zorder_prune and its DuckDB
     * oracle: both engines must read the SAME parquet footers, and oracle
     * SQL is a static string — so the path is an absolute location under
-    * the repo build dir, overwritten on every run and left in place for
+    * the working dir's `target/`, overwritten on every run and left in place for
     * the post-run `parquet_metadata()` replay. Keyed by the JVM's pid
     * (the q200/q202 applicationId pattern — a pid is available without a
     * live session, so the oracle string interpolates the same value):
     * the round-11 sf0.1 gate proved a FIXED path races with a concurrent
     * suite run on the same host, which clobbered the directory mid-gate. */
   val Q128Dir =
-    s"/root/repo/target/q128_layout_pid${ProcessHandle.current().pid()}"
+    new java.io.File(s"target/q128_layout_pid${ProcessHandle.current().pid()}").getAbsolutePath
 
   private def prep(spark: SparkSession, sfDir: String, names: String*): Unit = {
     graft.spatial.functions.register(spark)
@@ -2226,7 +2226,7 @@ object Queries {
       // tiling keeps doubled interior edges and overshoots it (adjacent
       // case: 16 undissolved vs 12 dissolved); the type column pins
       // shell-merging (Polygon vs MultiPolygon). Coordinates are exact
-      // small doubles, so every clip intersection is IEEE-exact.
+      // small doubles, so every overlay node is IEEE-exact.
       prep(s, d, "nation")
       s.sql("""
         SELECT n_nationkey,
@@ -2730,8 +2730,8 @@ object Queries {
     }),
 
     "q30_st_setops" -> ((s, d) => {
-      // rect∩rect / rect−rect / rect∪rect via the convex overlay; coords are
-      // powers of two so every clip intersection is IEEE-exact → plain
+      // rect∩rect / rect−rect / rect∪rect via the JTS overlay; coords are
+      // powers of two so every overlay node is IEEE-exact → plain
       // arithmetic oracle with no rounding
       prep(s, d, "nation")
       s.sql("""
@@ -2822,13 +2822,11 @@ object Queries {
     "q36_union_agg" -> ((s, d) => {
       // dissolved union of per-nation rects per segment; disjoint
       // power-of-two rects → union area = 16384 × distinct nations.
-      // DELIBERATE COST TRADE (round 6, ~3×): st_union_agg produces the
-      // DISSOLVED geometry (directed-edge cancellation, shells+holes —
-      // certified by q87) even though this query only reads its area,
-      // which would be identical on the pre-dissolve tiling. Users get
-      // the correct union shape; the per-group object aggregation is
-      // bounded (≤25 rects/group) so the cost does not grow with rows,
-      // only with groups — scale-safe at 100 TB.
+      // st_union_agg is the JTS unary union: shared edges merge into
+      // shells and holes (the same overlay q87 certifies for ST_Union),
+      // though this query only reads the area. The per-group object
+      // aggregation is bounded (≤25 rects/group) so the cost does not
+      // grow with rows, only with groups.
       prep(s, d, "customer")
       s.sql("""
         SELECT c_mktsegment,

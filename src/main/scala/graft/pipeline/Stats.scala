@@ -436,7 +436,7 @@ object Stats {
     // spread the slim (group, value) projection before the per-row md5
     // work — same single-row-group-input repair as [[values]]
     Par.spread(df.where(col(valueCol).isNotNull)
-        .select((groupCols :+ valueCol).map(col): _*))
+        .select((groupCols :+ valueCol).distinct.map(col): _*))
       .select(groupCols.map(col) :+
         conv(substring(h, 1, p / 4), 16, 10).cast("int").as("__b") :+
         when(x === 0L, lit(49)).otherwise(lit(49) - length(bin(x)))

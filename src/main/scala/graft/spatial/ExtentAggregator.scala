@@ -20,9 +20,11 @@ case class ExtentBuf(var xmin: Double, var ymin: Double, var xmax: Double, var y
  * The reference's merge bugs (state order mismatch and min-instead-of-max
  * fold, src/udafs/extent.rs:97-104,210-224) are deliberately NOT replicated;
  * we implement the intended semantics. Null and empty geometries are
- * ignored; an all-empty group yields a null extent (finish returns null).
+ * ignored; a group with no non-empty geometry yields a NULL extent
+ * (`finish` returns None, which the output encoder writes as a NULL
+ * `struct<xmin,ymin,xmax,ymax>`).
  */
-class ExtentAggregator extends Aggregator[Array[Byte], ExtentBuf, Extent] {
+class ExtentAggregator extends Aggregator[Array[Byte], ExtentBuf, Option[Extent]] {
   def zero: ExtentBuf = ExtentBuf(
     Double.PositiveInfinity, Double.PositiveInfinity,
     Double.NegativeInfinity, Double.NegativeInfinity)
@@ -49,9 +51,9 @@ class ExtentAggregator extends Aggregator[Array[Byte], ExtentBuf, Extent] {
     a
   }
 
-  def finish(b: ExtentBuf): Extent =
-    if (b.xmin > b.xmax) null else Extent(b.xmin, b.ymin, b.xmax, b.ymax)
+  def finish(b: ExtentBuf): Option[Extent] =
+    if (b.xmin > b.xmax) None else Some(Extent(b.xmin, b.ymin, b.xmax, b.ymax))
 
   def bufferEncoder: Encoder[ExtentBuf] = Encoders.product[ExtentBuf]
-  def outputEncoder: Encoder[Extent] = Encoders.product[Extent]
+  def outputEncoder: Encoder[Option[Extent]] = Encoders.product[Option[Extent]]
 }

@@ -1,1179 +1,149 @@
 package graft.spatial
 
-import scala.collection.mutable.ArrayBuffer
+import org.locationtech.jts.{geom => jts}
+import org.locationtech.jts.algorithm.MinimumBoundingCircle
+import org.locationtech.jts.geom.impl.PackedCoordinateSequence
+import org.locationtech.jts.operation.buffer.BufferOp
+import org.locationtech.jts.operation.overlayng.{OverlayNG, OverlayNGRobust}
+import org.locationtech.jts.operation.relateng.{RelateNG, RelatePredicate, TopologyPredicate}
+import org.locationtech.jts.operation.valid.IsSimpleOp
+import org.locationtech.jts.simplify.DouglasPeuckerSimplifier
 
 /**
- * Set-theoretic / constructive operations and the remaining relationship
- * predicates from the reference's declared scope (reference: README.md:8-39 —
- * all unchecked `[ ]` there; this is the extension roadmap SURVEY §7.6).
+ * Set-theoretic / constructive operations and the relationship predicates
+ * beyond [[GeomOps]], delegated to JTS 1.20 (the reference likewise
+ * delegates to the `geo` crate instead of hand-rolling geometry):
+ *  - overlay (intersection/difference/union/symdifference): `OverlayNGRobust`,
+ *    any pair of Point/Line/Polygon classes and their multi forms;
+ *  - buffer: `BufferOp` with `quadSegs` segments per quarter circle;
+ *  - relate and the predicates: `RelateNG`; isSimple: `IsSimpleOp`;
+ *    boundary: `getBoundary`; minimum bounding circle: `MinimumBoundingCircle`.
  *
- * Implementation envelope (planar/simple-feature):
- *  - polygon×polygon overlay (intersection/difference/union/symdifference)
- *    handles general simple polygons including holes: convex operands use
- *    Sutherland–Hodgman clipping directly; non-convex operands are
- *    ear-clipped into triangles and combined through the piece engine
- *    (outer minus holes → disjoint simple pieces). Line×line overlay is
- *    unsupported (SQL NULL).
- *  - union/symdifference DISSOLVE their piecewise output ([[dissolve]]):
- *    shared boundaries merge into shell-and-holes polygons (the
- *    PostGIS-shaped result), guarded by an area-preservation check that
- *    falls back to the area-correct disjoint tiling when float-divergent
- *    piece boundaries defeat edge cancellation ([[dissolveChecked]]).
- *  - buffer: disks for points, capsules (hull of endpoint disks) for
- *    segments, `quadSegs`×4-gon circle approximation; polygon buffer =
- *    polygon ⊎ boundary capsules (approximate).
+ * Semantics are JTS's (GEOS/PostGIS share them). Outputs are 2D and are
+ * written by our own WKB/WKT writers. Constructive outputs drop collinear
+ * node vertices, so a dissolved union keeps only its corners. Inputs JTS
+ * rejects — a mixed-dimension GEOMETRYCOLLECTION operand, an invalid
+ * polygon the overlay cannot node (e.g. a bowtie), an unclosed ring —
+ * give `None` (SQL NULL), not a failed query.
  */
 object GeomSetOps {
 
-  private def orient(ax: Double, ay: Double, bx: Double, by: Double,
-                     cx: Double, cy: Double): Double =
-    (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
+  private val factory = new jts.GeometryFactory()
 
-  /** Ring as (x,y) pairs without the closing duplicate. */
-  private def openRing(cs: Array[Double], dim: Int): Array[(Double, Double)] = {
-    val n = cs.length / dim
-    val out = new ArrayBuffer[(Double, Double)](n)
-    var i = 0
-    while (i < n) {
-      out += ((cs(i * dim), cs(i * dim + 1)))
-      i += 1
-    }
-    while (out.length > 1 && out.head == out.last) out.remove(out.length - 1)
-    out.toArray
-  }
+  // ------------------------------------------------------------- bridge
 
-  private def closeRing(pts: Array[(Double, Double)]): Array[Double] = {
-    val out = new Array[Double]((pts.length + 1) * 2)
-    var i = 0
-    while (i < pts.length) { out(i * 2) = pts(i)._1; out(i * 2 + 1) = pts(i)._2; i += 1 }
-    out(pts.length * 2) = pts(0)._1
-    out(pts.length * 2 + 1) = pts(0)._2
-    out
-  }
+  private def seq(cs: Array[Double], dim: Int): jts.CoordinateSequence =
+    new PackedCoordinateSequence.Double(cs, dim, if (dim == 4) 1 else 0)
 
-  /** Is this single-ring polygon convex? (holes → not convex) */
-  def isConvex(pg: Polygon): Boolean = {
-    if (pg.isEmpty || pg.rings.length != 1) return false
-    val r = openRing(pg.rings(0), pg.dim)
-    if (r.length < 3) return false
-    var sign = 0
-    var i = 0
-    while (i < r.length) {
-      val a = r(i); val b = r((i + 1) % r.length); val c = r((i + 2) % r.length)
-      val o = orient(a._1, a._2, b._1, b._2, c._1, c._2)
-      if (o != 0) {
-        val s = if (o > 0) 1 else -1
-        if (sign == 0) sign = s
-        else if (sign != s) return false
-      }
-      i += 1
-    }
-    true
-  }
+  private def ring(cs: Array[Double], dim: Int): jts.LinearRing =
+    factory.createLinearRing(seq(cs, dim))
 
-  /** CCW-oriented open ring of a convex polygon. */
-  private def ccwRing(pg: Polygon): Array[(Double, Double)] = {
-    val r = openRing(pg.rings(0), pg.dim)
-    var area2 = 0.0
-    var i = 0
-    while (i < r.length) {
-      val j = (i + 1) % r.length
-      area2 += r(i)._1 * r(j)._2 - r(j)._1 * r(i)._2
-      i += 1
-    }
-    if (area2 < 0) r.reverse else r
-  }
-
-  /** Sutherland–Hodgman: clip `subject` ring by CCW convex ring `clip`. */
-  private def clipRing(subject: Array[(Double, Double)],
-                       clip: Array[(Double, Double)]): Array[(Double, Double)] = {
-    var out = subject
-    var e = 0
-    while (e < clip.length && out.length > 0) {
-      val a = clip(e); val b = clip((e + 1) % clip.length)
-      out = clipHalfPlane(out, a._1, a._2, b._1, b._2)
-      e += 1
-    }
-    out
-  }
-
-  /** Keep the part of `ring` on/left of directed line (ax,ay)→(bx,by). */
-  private def clipHalfPlane(ring: Array[(Double, Double)],
-                            ax: Double, ay: Double, bx: Double, by: Double): Array[(Double, Double)] = {
-    if (ring.isEmpty) return ring
-    val out = new ArrayBuffer[(Double, Double)](ring.length + 4)
-    var i = 0
-    while (i < ring.length) {
-      val cur = ring(i)
-      val prev = ring((i + ring.length - 1) % ring.length)
-      val curIn = orient(ax, ay, bx, by, cur._1, cur._2) >= 0
-      val prevIn = orient(ax, ay, bx, by, prev._1, prev._2) >= 0
-      if (curIn) {
-        if (!prevIn) out += lineIntersect(prev, cur, (ax, ay), (bx, by))
-        out += cur
-      } else if (prevIn) {
-        out += lineIntersect(prev, cur, (ax, ay), (bx, by))
-      }
-      i += 1
-    }
-    // drop consecutive duplicates
-    val ded = new ArrayBuffer[(Double, Double)](out.length)
-    out.foreach { p => if (ded.isEmpty || ded.last != p) ded += p }
-    while (ded.length > 1 && ded.head == ded.last) ded.remove(ded.length - 1)
-    if (ded.length < 3) Array.empty else ded.toArray
-  }
-
-  /** Intersection of segment p→q with infinite line a→b. */
-  private def lineIntersect(p: (Double, Double), q: (Double, Double),
-                            a: (Double, Double), b: (Double, Double)): (Double, Double) = {
-    val dx = q._1 - p._1; val dy = q._2 - p._2
-    val ex = b._1 - a._1; val ey = b._2 - a._2
-    val denom = dx * ey - dy * ex
-    if (denom == 0) return q
-    val t = ((a._1 - p._1) * ey - (a._2 - p._2) * ex) / denom
-    (p._1 + t * dx, p._2 + t * dy)
-  }
-
-  private def ringToPolygon(r: Array[(Double, Double)]): Option[Polygon] =
-    if (r.length < 3) None
-    else {
-      var area2 = 0.0
-      var i = 0
-      while (i < r.length) {
-        val j = (i + 1) % r.length
-        area2 += r(i)._1 * r(j)._2 - r(j)._1 * r(i)._2
-        i += 1
-      }
-      if (area2 == 0) None else Some(Polygon(Array(closeRing(r)), 2))
-    }
-
-  private def asConvexFirst(a: Polygon, b: Polygon): Option[(Polygon, Polygon, Boolean)] =
-    if (isConvex(a)) Some((a, b, false))
-    else if (isConvex(b)) Some((b, a, true))
-    else None
-
-  // ------------------------------------------------ ear-clipping triangulation
-
-  /**
-   * Triangulate a simple polygon's outer ring (ear clipping, O(n²)) into
-   * convex pieces that partition it — the bridge from the convex-only
-   * overlay to general simple polygons: clip/difference against each
-   * triangle and combine. Holes are not triangulated (outer ring only).
-   */
-  def triangulate(pg: Polygon): Array[Polygon] = {
-    if (pg.isEmpty) return Array.empty
-    var r = ccwRing(pg)
-    // drop consecutive duplicates
-    r = r.zipWithIndex.filter { case (p, i) => i == 0 || p != r(i - 1) }.map(_._1)
-    if (r.length < 3) return Array.empty
-    if (r.length == 3) return Array(Polygon(Array(closeRing(r)), 2))
-    val verts = scala.collection.mutable.ArrayBuffer(r.toIndexedSeq: _*)
-    val out = new ArrayBuffer[Polygon]
-    var guard = 0
-    val guardMax = verts.length * verts.length + 16
-    while (verts.length > 3 && guard < guardMax) {
-      guard += 1
-      var clipped = false
-      var i = 0
-      while (i < verts.length && !clipped) {
-        val n = verts.length
-        val a = verts((i + n - 1) % n); val b = verts(i); val c = verts((i + 1) % n)
-        val cross = orient(a._1, a._2, b._1, b._2, c._1, c._2)
-        if (cross > 0) { // convex corner (CCW)
-          // ear if no other vertex strictly inside triangle abc
-          var inside = false
-          var j = 0
-          while (j < n && !inside) {
-            if (j != (i + n - 1) % n && j != i && j != (i + 1) % n) {
-              val p = verts(j)
-              if (pointInTriStrict(a, b, c, p)) inside = true
-            }
-            j += 1
-          }
-          if (!inside) {
-            out += Polygon(Array(closeRing(Array(a, b, c))), 2)
-            verts.remove(i)
-            clipped = true
-          }
-        }
-        i += 1
-      }
-      if (!clipped) {
-        // degenerate (collinear run) — drop a zero-turn vertex and retry
-        val n = verts.length
-        var dropped = false
-        var i2 = 0
-        while (i2 < n && !dropped) {
-          val a = verts((i2 + n - 1) % n); val b = verts(i2); val c = verts((i2 + 1) % n)
-          if (orient(a._1, a._2, b._1, b._2, c._1, c._2) == 0) { verts.remove(i2); dropped = true }
-          i2 += 1
-        }
-        if (!dropped) return out.toArray // give up on pathological input
-      }
-    }
-    if (verts.length == 3)
-      out += Polygon(Array(closeRing(verts.toArray)), 2)
-    out.toArray
-  }
-
-  private def pointInTriStrict(a: (Double, Double), b: (Double, Double),
-                               c: (Double, Double), p: (Double, Double)): Boolean = {
-    val d1 = orient(a._1, a._2, b._1, b._2, p._1, p._2)
-    val d2 = orient(b._1, b._2, c._1, c._2, p._1, p._2)
-    val d3 = orient(c._1, c._2, a._1, a._2, p._1, p._2)
-    d1 > 0 && d2 > 0 && d3 > 0
-  }
-
-  // ------------------------------------------- piece-level overlay engine
-
-  /** Clip a set of simple (single-ring) pieces by a single-ring polygon:
-    * convex clip → direct Sutherland–Hodgman; else per-triangle. */
-  private def clipPieces(pieces: Array[Polygon], clip: Polygon): Array[Polygon] = {
-    val clips: Array[Array[(Double, Double)]] =
-      if (isConvex(clip)) Array(ccwRing(clip))
-      else triangulate(clip).map(ccwRing)
-    pieces.flatMap { p =>
-      val subj = openRing(p.rings(0), p.dim)
-      clips.flatMap(c => ringToPolygon(clipRing(subj, c)))
-    }
-  }
-
-  /** Subtract a single-ring polygon from every piece. */
-  private def subtractPieces(pieces: Array[Polygon], sub: Polygon): Array[Polygon] = {
-    val subs: Array[Polygon] =
-      if (isConvex(sub)) Array(sub) else triangulate(sub)
-    subs.foldLeft(pieces)((ps, s) => ps.flatMap(p => differenceByConvex(p, s).polygons))
-  }
-
-  /** Decompose a polygon (holes allowed) into disjoint simple pieces. */
-  private def piecesOf(p: Polygon): Array[Polygon] = {
-    var pieces: Array[Polygon] = Array(Polygon(Array(p.rings(0)), p.dim))
-    var r = 1
-    while (r < p.rings.length) {
-      pieces = subtractPieces(pieces, Polygon(Array(p.rings(r)), p.dim))
-      r += 1
-    }
-    pieces
-  }
-
-  /** Hole-aware polygon ∩ polygon: (pieces of a) ∩ outer_b, minus b's holes. */
-  private def polygonIntersectionPieces(a: Polygon, b: Polygon): Array[Polygon] = {
-    var pieces = clipPieces(piecesOf(a), Polygon(Array(b.rings(0)), b.dim))
-    var r = 1
-    while (r < b.rings.length) {
-      pieces = subtractPieces(pieces, Polygon(Array(b.rings(r)), b.dim))
-      r += 1
-    }
-    pieces
-  }
-
-  /** Hole-aware polygon − polygon: (a − outer_b) ∪ (a ∩ hole_b) per hole. */
-  private def polygonDifferencePieces(a: Polygon, b: Polygon): Array[Polygon] = {
-    val aPieces = piecesOf(a)
-    val minusOuter = subtractPieces(aPieces, Polygon(Array(b.rings(0)), b.dim))
-    val holeParts = (1 until b.rings.length).flatMap { r =>
-      clipPieces(aPieces, Polygon(Array(b.rings(r)), b.dim))
-    }
-    minusOuter ++ holeParts
-  }
-
-  private def intersectByTriangulation(a: Polygon, b: Polygon): MultiPolygon =
-    MultiPolygon(polygonIntersectionPieces(a, b), 2)
-
-  private def differenceByTriangulation(a: Polygon, b: Polygon): MultiPolygon =
-    MultiPolygon(polygonDifferencePieces(a, b), 2)
-
-  /** polygon ∩ polygon; requires one convex operand. */
-  def intersectConvex(a: Polygon, b: Polygon): Option[Geometry] =
-    asConvexFirst(a, b).map { case (convex, other, _) =>
-      if (other.rings.length != 1) {
-        // holes in subject: clip outer, subtract clipped holes via difference
-        val outer = clipRing(openRing(other.rings(0), other.dim), ccwRing(convex))
-        ringToPolygon(outer) match {
-          case None => Polygon(Array.empty, 2)
-          case Some(p) => p // hole interaction ignored in clip output
-        }
-      } else {
-        val res = clipRing(openRing(other.rings(0), other.dim), ccwRing(convex))
-        ringToPolygon(res).getOrElse(Polygon(Array.empty, 2))
-      }
-    }
-
-  /**
-   * subject − convex: decompose the convex polygon's complement into
-   * half-plane wedges: piece_i = subject ∩ outside(e_i) ∩ inside(e_1..i-1).
-   * Pieces are pairwise disjoint → MultiPolygon.
-   */
-  def differenceByConvex(subject: Polygon, convex: Polygon): MultiPolygon = {
-    val clip = ccwRing(convex)
-    val subj = openRing(subject.rings(0), subject.dim)
-    val pieces = new ArrayBuffer[Polygon]
-    var i = 0
-    while (i < clip.length) {
-      var piece = subj
-      // inside previous edges
-      var j = 0
-      while (j < i && piece.nonEmpty) {
-        val a = clip(j); val b = clip((j + 1) % clip.length)
-        piece = clipHalfPlane(piece, a._1, a._2, b._1, b._2)
-        j += 1
-      }
-      // outside edge i (reverse the directed edge → opposite half-plane)
-      if (piece.nonEmpty) {
-        val a = clip(i); val b = clip((i + 1) % clip.length)
-        piece = clipHalfPlane(piece, b._1, b._2, a._1, a._2)
-      }
-      ringToPolygon(piece).foreach(pieces += _)
-      i += 1
-    }
-    MultiPolygon(pieces.toArray, 2)
-  }
-
-  /** General dispatch: intersection across geometry classes. */
-  def intersection(a: Geometry, b: Geometry): Option[Geometry] = {
-    if (a.isEmpty || b.isEmpty) return Some(GeometryCollection(Array.empty, 2))
-    (a, b) match {
-      case (p: Point, g) => Some(if (GeomOps.intersects(p, g)) p else Point.empty)
-      case (g, p: Point) => Some(if (GeomOps.intersects(p, g)) p else Point.empty)
-      case (mp: MultiPoint, g) =>
-        Some(MultiPoint(mp.points.filter(p => !p.isEmpty && GeomOps.intersects(p, g)), mp.dim))
-      case (g, mp: MultiPoint) =>
-        Some(MultiPoint(mp.points.filter(p => !p.isEmpty && GeomOps.intersects(p, g)), mp.dim))
-      case (pa: Polygon, pb: Polygon) =>
-        if (pa.rings.length > 1 || pb.rings.length > 1)
-          Some(intersectByTriangulation(pa, pb)) // hole-aware piece engine
-        else intersectConvex(pa, pb).orElse(Some(intersectByTriangulation(pa, pb)))
-      case (pa: Polygon, mb: MultiPolygon) =>
-        val parts = mb.polygons.flatMap(p => intersection(pa, p)).flatMap {
-          case p: Polygon if !p.isEmpty => Array(p)
-          case m: MultiPolygon => m.polygons
-          case _ => Array.empty[Polygon]
-        }
-        Some(MultiPolygon(parts, 2))
-      case (ma: MultiPolygon, pb: Polygon) => intersection(pb, ma)
-      case _ => None // line overlay not supported
-    }
-  }
-
-  def difference(a: Geometry, b: Geometry): Option[Geometry] = {
-    if (a.isEmpty) return Some(GeometryCollection(Array.empty, 2))
-    if (b.isEmpty) return Some(a)
-    (a, b) match {
-      case (p: Point, g) => Some(if (GeomOps.intersects(p, g)) Point.empty else p)
-      case (mp: MultiPoint, g) =>
-        Some(MultiPoint(mp.points.filter(p => !p.isEmpty && !GeomOps.intersects(p, g)), mp.dim))
-      case (pa: Polygon, pb: Polygon) =>
-        if (pa.rings.length == 1 && pb.rings.length == 1 && isConvex(pb))
-          Some(differenceByConvex(pa, pb))
-        else Some(differenceByTriangulation(pa, pb)) // hole-aware piece engine
-      case _ => None
-    }
-  }
-
-  /** Union: A ⊎ (B − A) through the piece engine, then [[dissolve]]d —
-    * shared boundaries between the pieces (and between touching inputs)
-    * are merged, so the output is the shell-and-holes shape a
-    * PostGIS/DuckDB user expects, not an area-correct tiling. */
-  def union(a: Geometry, b: Geometry): Option[Geometry] = {
-    if (a.isEmpty) return Some(b)
-    if (b.isEmpty) return Some(a)
-    (a, b) match {
-      case (pa: Polygon, pb: Polygon) =>
-        if (!GeomOps.intersects(pa, pb)) Some(MultiPolygon(Array(pa, pb), 2))
-        else difference(pb, pa) match {
-          case Some(mp: MultiPolygon) => Some(dissolveChecked(Array(pa) ++ mp.polygons))
-          case Some(p: Polygon) if !p.isEmpty => Some(dissolveChecked(Array(pa, p)))
-          case Some(_) => Some(pa)
-          case None => None
-        }
-      case (p1: Point, p2: Point) =>
-        Some(if (p1.x == p2.x && p1.y == p2.y) p1 else MultiPoint(Array(p1, p2), 2))
-      case _ => None
-    }
-  }
-
-  /** Symmetric difference through the piece engine, [[dissolve]]d like
-    * [[union]] (touching A−B / B−A pieces merge across the erased
-    * zero-area seam). */
-  def symDifference(a: Geometry, b: Geometry): Option[Geometry] = {
-    (a, b) match {
-      case (pa: Polygon, pb: Polygon) =>
-        if (!GeomOps.intersects(pa, pb)) Some(MultiPolygon(Array(pa, pb), 2))
-        else {
-          def pieces(o: Option[Geometry]): Option[Array[Polygon]] = o.map {
-            case mp: MultiPolygon => mp.polygons
-            case p: Polygon if !p.isEmpty => Array(p)
-            case _ => Array.empty[Polygon]
-          }
-          for {
-            ab <- pieces(difference(pa, pb))
-            ba <- pieces(difference(pb, pa))
-          } yield dissolveChecked(ab ++ ba)
-        }
-      case _ => None
-    }
-  }
-
-  // -------------------------------------------------------------- dissolve
-
-  private def signedArea2(r: Array[(Double, Double)]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < r.length) {
-      val j = (i + 1) % r.length
-      s += r(i)._1 * r(j)._2 - r(j)._1 * r(i)._2
-      i += 1
-    }
-    s
-  }
-
-  private def pointInsideRing(r: Array[(Double, Double)], px: Double, py: Double): Boolean = {
-    var inside = false
-    var i = 0
-    var j = r.length - 1
-    while (i < r.length) {
-      val (xi, yi) = r(i); val (xj, yj) = r(j)
-      if (((yi > py) != (yj > py)) &&
-          (px < (xj - xi) * (py - yi) / (yj - yi) + xi)) inside = !inside
-      j = i
-      i += 1
-    }
-    inside
-  }
-
-  /**
-   * Merge the shared edges of a piecewise-disjoint polygon set into
-   * DISSOLVED polygons (outer rings + holes) — what a PostGIS/DuckDB user
-   * expects ST_Union to look like, instead of the piece engine's
-   * area-correct tiling.
-   *
-   * Boundary algebra on the planar subdivision the piece engine already
-   * produces:
-   *   1. orient every ring interior-on-left (outer CCW, holes CW) and
-   *      emit directed edges;
-   *   2. NODE: split edges at any vertex of the collection lying on them
-   *      (tolerance `1e-9·scale`) — adjacent pieces may subdivide a shared
-   *      geometric edge differently (T-junctions);
-   *   3. cancel: a sub-edge appearing in both directions separates two
-   *      interiors → interior edge, dropped; net edges form the boundary;
-   *   4. walk boundary loops (at junction vertices: next edge clockwise
-   *      from the reversed incoming — left-face traversal), dropping
-   *      collinear intermediate vertices;
-   *   5. CCW loops are shells, CW loops are holes; each hole attaches to
-   *      the smallest shell containing it.
-   *
-   * Returns a single Polygon when one shell results (PostGIS shape),
-   * else a MultiPolygon.
-   */
-  def dissolve(pieces: Array[Polygon]): Geometry = {
-    val polys = pieces.filter(p => !p.isEmpty && p.rings.nonEmpty)
-    if (polys.isEmpty) return MultiPolygon(Array.empty, 2)
-
-    // 1. directed edges, interior on the left
-    val edges = ArrayBuffer[((Double, Double), (Double, Double))]()
-    for (p <- polys; ri <- p.rings.indices) {
-      val open = openRing(p.rings(ri), p.dim)
-      if (open.length >= 3) {
-        val ccw = signedArea2(open) > 0
-        val oriented = if ((ri == 0) == ccw) open else open.reverse
-        var i = 0
-        while (i < oriented.length) {
-          val a = oriented(i); val b = oriented((i + 1) % oriented.length)
-          if (a != b) edges += ((a, b))
-          i += 1
-        }
-      }
-    }
-    if (edges.isEmpty) return MultiPolygon(Array.empty, 2)
-
-    // 2. node at vertices lying on other edges
-    val verts = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct
-    var scale = 1.0
-    verts.foreach(v => scale = math.max(scale,
-      math.max(math.abs(v._1), math.abs(v._2))))
-    val eps = 1e-9 * scale
-    val noded = edges.flatMap { case (a, b) =>
-      val dx = b._1 - a._1; val dy = b._2 - a._2
-      val len2 = dx * dx + dy * dy
-      if (len2 == 0) Seq.empty
-      else {
-        val cuts = verts.iterator.flatMap { v =>
-          if (v == a || v == b) Iterator.empty
-          else {
-            val t = ((v._1 - a._1) * dx + (v._2 - a._2) * dy) / len2
-            if (t <= 0 || t >= 1) Iterator.empty
-            else {
-              val px = a._1 + t * dx; val py = a._2 + t * dy
-              if (math.hypot(v._1 - px, v._2 - py) < eps) Iterator((t, v))
-              else Iterator.empty
-            }
-          }
-        }.toArray.sortBy(_._1)
-        val chain = a +: cuts.map(_._2) :+ b
-        (0 until chain.length - 1).collect {
-          case i if chain(i) != chain(i + 1) => (chain(i), chain(i + 1))
-        }
-      }
-    }
-
-    // 3. cancel opposite directions; keep net boundary edges
-    val dirCount = scala.collection.mutable.HashMap
-      .empty[((Double, Double), (Double, Double)), Int]
-    noded.foreach(e => dirCount(e) = dirCount.getOrElse(e, 0) + 1)
-    val boundary = ArrayBuffer[((Double, Double), (Double, Double))]()
-    dirCount.foreach { case ((a, b), c) =>
-      val rev = dirCount.getOrElse((b, a), 0)
-      if (c > rev) boundary += ((a, b)) // net winner, kept once
-    }
-    if (boundary.isEmpty) return MultiPolygon(Array.empty, 2)
-
-    // 4. walk boundary loops
-    val outgoing = scala.collection.mutable.HashMap
-      .empty[(Double, Double), ArrayBuffer[(Double, Double)]]
-    boundary.foreach { case (a, b) =>
-      outgoing.getOrElseUpdate(a, ArrayBuffer.empty) += b
-    }
-    val used = scala.collection.mutable.HashSet
-      .empty[((Double, Double), (Double, Double))]
-    def nextEdge(from: (Double, Double), at: (Double, Double)): Option[(Double, Double)] = {
-      val cands = outgoing.getOrElse(at, ArrayBuffer.empty)
-        .filter(n => !used((at, n)))
-      if (cands.isEmpty) None
-      else if (cands.length == 1) Some(cands.head)
-      else {
-        // left-face rule: next outgoing edge clockwise from the REVERSED
-        // incoming direction keeps the traversal on the same face
-        val revAng = math.atan2(from._2 - at._2, from._1 - at._1)
-        Some(cands.minBy { n =>
-          val ang = math.atan2(n._2 - at._2, n._1 - at._1)
-          val d = (revAng - ang) % (2 * math.Pi)
-          val cw = if (d <= 1e-12) d + 2 * math.Pi else d
-          cw
-        })
-      }
-    }
-    val loops = ArrayBuffer[Array[(Double, Double)]]()
-    boundary.foreach { start =>
-      if (!used(start)) {
-        val pts = ArrayBuffer[(Double, Double)](start._1)
-        var cur = start
-        var closed = false
-        var steps = 0
-        val limit = boundary.length + 1
-        while (!closed && steps <= limit) {
-          used += cur
-          if (cur._2 == start._1) closed = true
-          else {
-            pts += cur._2
-            nextEdge(cur._1, cur._2) match {
-              case Some(n) => cur = (cur._2, n)
-              case None => steps = limit + 1 // dead end: abandon
-            }
-          }
-          steps += 1
-        }
-        if (closed && pts.length >= 3) {
-          // drop collinear intermediates introduced by noding
-          val cleaned = pts.indices.collect {
-            case i if {
-              val p = pts((i + pts.length - 1) % pts.length)
-              val c = pts(i)
-              val n = pts((i + 1) % pts.length)
-              math.abs(orient(p._1, p._2, c._1, c._2, n._1, n._2)) > eps * eps ||
-                // keep spikes (degenerate but orientation 0 with reversal)
-                ((n._1 - c._1) * (c._1 - p._1) + (n._2 - c._2) * (c._2 - p._2)) < 0
-            } => pts(i)
-          }.toArray
-          if (cleaned.length >= 3) loops += cleaned
-        }
-      }
-    }
-
-    // 5. shells vs holes; attach holes to the smallest containing shell
-    val shells = ArrayBuffer[(Array[(Double, Double)], Double)]()
-    val holes = ArrayBuffer[Array[(Double, Double)]]()
-    loops.foreach { r =>
-      val a2 = signedArea2(r)
-      if (a2 > 0) shells += ((r, a2)) else if (a2 < 0) holes += r
-    }
-    if (shells.isEmpty) return MultiPolygon(Array.empty, 2)
-    val holeLists = Array.fill(shells.length)(ArrayBuffer[Array[(Double, Double)]]())
-    holes.foreach { h =>
-      val probe = h(0)
-      val owners = shells.zipWithIndex.filter { case ((s, _), _) =>
-        pointInsideRing(s, probe._1, probe._2)
-      }
-      if (owners.nonEmpty) holeLists(owners.minBy(_._1._2)._2) += h
-    }
-    val outPolys = shells.zipWithIndex.map { case ((s, _), i) =>
-      Polygon(Array(closeRing(s)) ++ holeLists(i).map(closeRing), 2)
-    }.toArray
-    if (outPolys.length == 1) outPolys(0) else MultiPolygon(outPolys, 2)
-  }
-
-  /**
-   * [[dissolve]] with an AREA-PRESERVATION check: edge cancellation needs
-   * shared sub-edges to coincide (up to the noding tolerance), which holds
-   * for clip boundaries derived from the same cut lines (rectangles,
-   * axis-aligned tilings, the common GIS shapes) but can fail on
-   * triangulated float-soup overlays where adjacent pieces compute the
-   * same geometric edge through different intersection arithmetic. When
-   * the dissolved area diverges from the piece-sum, fall back to the
-   * area-correct non-dissolved tiling — dissolution is a representation
-   * upgrade, never allowed to change the region.
-   */
-  private[spatial] def dissolveChecked(pieces: Array[Polygon]): Geometry = {
-    val total = pieces.iterator.map(p => GeomOps.area(p)).sum
-    val d = try dissolve(pieces) catch { case _: Exception => null }
-    val tol = 1e-7 * math.max(1.0, total)
-    if (d != null && math.abs(GeomOps.area(d) - total) <= tol) d
-    else MultiPolygon(pieces, 2)
-  }
-
-  // ---------------------------------------------------------------- buffer
-
-  /** N-gon disk around (cx,cy); CCW, closed ring. */
-  private def disk(cx: Double, cy: Double, r: Double, segs: Int): Array[(Double, Double)] = {
-    val out = new Array[(Double, Double)](segs)
-    var i = 0
-    while (i < segs) {
-      val t = 2.0 * math.Pi * i / segs
-      out(i) = (cx + r * math.cos(t), cy + r * math.sin(t))
-      i += 1
-    }
-    out
-  }
-
-  private def hullOf(pts: Array[(Double, Double)]): Polygon =
-    GeomOps.convexHull(MultiPoint(pts.map(p => Point.xy(p._1, p._2)), 2)) match {
-      case p: Polygon => p
-      case other => Polygon(Array.empty, 2) // degenerate
-    }
-
-  /**
-   * ST_Buffer with `quadSegs` segments per quarter circle (PostGIS default 8).
-   * Points/multipoints: exact N-gon disks. Lines: per-segment capsules
-   * (convex hull of endpoint disks — exact capsule up to N-gon error).
-   * Polygons: polygon ⊎ boundary capsules (approximate outward buffer).
-   * Negative distances are unsupported (null).
-   */
-  def buffer(g: Geometry, dist: Double, quadSegs: Int = 8): Option[Geometry] = {
-    if (dist < 0) return g match {
-      // erosion: polygon minus the distance-d band around its boundary
-      // (boundary-segment capsules cover the band up to N-gon error)
-      case pg: Polygon => Some(erode(pg, -dist, quadSegs))
-      case mpg: MultiPolygon =>
-        Some(MultiPolygon(mpg.polygons.flatMap(p => erode(p, -dist, quadSegs).polygons), 2))
-      case _ => None // erosion of lower-dimensional geometry is empty-ish; unsupported
-    }
-    if (g.isEmpty) return Some(Polygon(Array.empty, 2))
-    if (dist == 0) return Some(g)
-    val segs = math.max(quadSegs * 4, 8)
-    g match {
-      case p: Point => Some(Polygon(Array(closeRing(disk(p.x, p.y, dist, segs))), 2))
-      case mp: MultiPoint =>
-        Some(MultiPolygon(mp.points.filter(!_.isEmpty)
-          .map(p => Polygon(Array(closeRing(disk(p.x, p.y, dist, segs))), 2)), 2))
-      case l: LineString => Some(MultiPolygon(segmentCapsules(l, dist, segs), 2))
-      case ml: MultiLineString =>
-        Some(MultiPolygon(ml.lines.flatMap(segmentCapsules(_, dist, segs)), 2))
-      case pg: Polygon =>
-        val capsules = pg.rings.flatMap { ring =>
-          segmentCapsules(LineString(ring, pg.dim), dist, segs)
-        }
-        Some(MultiPolygon(Array(Polygon(pg.rings, pg.dim)) ++ capsules, 2))
-      case mpg: MultiPolygon =>
-        val parts = mpg.polygons.flatMap(p => buffer(p, dist, quadSegs) match {
-          case Some(m: MultiPolygon) => m.polygons
-          case Some(p2: Polygon) => Array(p2)
-          case _ => Array.empty[Polygon]
-        })
-        Some(MultiPolygon(parts, 2))
-      case gc: GeometryCollection =>
-        val parts = gc.geoms.flatMap(x => buffer(x, dist, quadSegs) match {
-          case Some(m: MultiPolygon) => m.polygons
-          case Some(p2: Polygon) => Array(p2)
-          case _ => Array.empty[Polygon]
-        })
-        Some(MultiPolygon(parts, 2))
-    }
-  }
-
-  private def erode(pg: Polygon, dist: Double, quadSegs: Int): MultiPolygon = {
-    if (pg.isEmpty) return MultiPolygon(Array.empty, 2)
-    val segs = math.max(quadSegs * 4, 8)
-    var pieces = piecesOf(pg)
-    pg.rings.foreach { ring =>
-      segmentCapsules(LineString(ring, pg.dim), dist, segs).foreach { capsule =>
-        pieces = pieces.flatMap(p => differenceByConvex(p, capsule).polygons)
-      }
-    }
-    MultiPolygon(pieces, 2)
-  }
-
-  private def segmentCapsules(l: LineString, dist: Double, segs: Int): Array[Polygon] = {
-    val dim = l.dim
-    val n = l.coords.length / dim
-    if (n == 1)
-      return Array(Polygon(Array(closeRing(disk(l.coords(0), l.coords(1), dist, segs))), 2))
-    val out = new ArrayBuffer[Polygon](n - 1)
-    var i = 1
-    while (i < n) {
-      val x0 = l.coords((i - 1) * dim); val y0 = l.coords((i - 1) * dim + 1)
-      val x1 = l.coords(i * dim); val y1 = l.coords(i * dim + 1)
-      out += hullOf(disk(x0, y0, dist, segs) ++ disk(x1, y1, dist, segs))
-      i += 1
-    }
-    out.toArray
-  }
-
-  // --------------------------------------------- remaining predicates
-
-  /** ST_Equals: identical point sets (mutual containment for areal; exact
-    * coordinate-multiset comparison for puntal; sequence or reverse for lineal). */
-  def equalsGeom(a: Geometry, b: Geometry): Boolean = {
-    if (a.isEmpty && b.isEmpty) return a.topoDim == b.topoDim
-    if (a.isEmpty || b.isEmpty) return false
-    (a.topoDim, b.topoDim) match {
-      case (0, 0) =>
-        def pts(g: Geometry): Set[(Double, Double)] = g match {
-          case p: Point => Set((p.x, p.y))
-          case mp: MultiPoint => mp.points.filter(!_.isEmpty).map(p => (p.x, p.y)).toSet
-          case _ => Set.empty
-        }
-        pts(a) == pts(b)
-      case (1, 1) =>
-        def seqs(g: Geometry): Seq[Seq[(Double, Double)]] = g match {
-          case l: LineString => Seq(pairsOf(l.coords, l.dim))
-          case ml: MultiLineString => ml.lines.map(l => pairsOf(l.coords, l.dim)).toSeq
-          case _ => Seq.empty
-        }
-        val sa = seqs(a).map(canonicalLine).sortBy(_.toString)
-        val sb = seqs(b).map(canonicalLine).sortBy(_.toString)
-        sa == sb
-      case (2, 2) => GeomOps.contains(a, b) && GeomOps.contains(b, a)
-      case _ => false
-    }
-  }
-
-  private def pairsOf(cs: Array[Double], dim: Int): Seq[(Double, Double)] =
-    (0 until cs.length / dim).map(i => (cs(i * dim), cs(i * dim + 1)))
-
-  private def canonicalLine(s: Seq[(Double, Double)]): Seq[(Double, Double)] =
-    if (s.isEmpty || s <= s.reverse) s else s.reverse
-
-  private implicit class SeqCmp(val s: Seq[(Double, Double)]) {
-    def <=(o: Seq[(Double, Double)]): Boolean = s.toString <= o.toString
-  }
-
-  /** Does any vertex OR segment midpoint of `b` lie strictly inside areal
-    * geometry `a`? (Midpoints catch segments whose endpoints sit on the
-    * boundary but whose interior passes through `a`.) */
-  private def anyVertexStrictlyInside(a: Geometry, b: Geometry): Boolean = {
-    var found = false
-    b.foreachSeq { (cs, dim) =>
-      val n = cs.length / dim
-      var i = 0
-      while (!found && i < n) {
-        val x = cs(i * dim); val y = cs(i * dim + 1)
-        if (!x.isNaN && pointStrictlyInside(a, x, y)) found = true
-        if (!found && i + 1 < n) {
-          val mx = (x + cs((i + 1) * dim)) / 2
-          val my = (y + cs((i + 1) * dim + 1)) / 2
-          if (!mx.isNaN && pointStrictlyInside(a, mx, my)) found = true
-        }
-        i += 1
-      }
-    }
-    found
-  }
-
-  private def pointStrictlyInside(g: Geometry, x: Double, y: Double): Boolean = g match {
+  private[spatial] def toJts(g: Geometry): jts.Geometry = g match {
+    case p: Point => if (p.isEmpty) factory.createPoint() else factory.createPoint(seq(p.coords, p.dim))
+    case l: LineString => factory.createLineString(seq(l.coords, l.dim))
     case pg: Polygon =>
-      GeomOps.polygonContainsPoint(pg, x, y) && !onBoundary(pg, x, y)
-    case mpg: MultiPolygon => mpg.polygons.exists(pointStrictlyInside(_, x, y))
-    case gc: GeometryCollection => gc.geoms.exists(pointStrictlyInside(_, x, y))
-    case _ => false
-  }
-
-  private def onBoundary(g: Geometry, x: Double, y: Double): Boolean = {
-    var found = false
-    g.foreachSeq { (cs, dim) =>
-      val n = cs.length / dim
-      var i = 1
-      while (!found && i < n) {
-        val ax = cs((i - 1) * dim); val ay = cs((i - 1) * dim + 1)
-        val bx = cs(i * dim); val by = cs(i * dim + 1)
-        if (orient(ax, ay, bx, by, x, y) == 0 &&
-            math.min(ax, bx) <= x && x <= math.max(ax, bx) &&
-            math.min(ay, by) <= y && y <= math.max(ay, by)) found = true
-        i += 1
-      }
-    }
-    found
-  }
-
-  private def properCrossing(a: Geometry, b: Geometry): Boolean = {
-    var found = false
-    foreachSeg(a) { (ax, ay, bx, by) =>
-      if (!found) foreachSeg(b) { (cx, cy, dx, dy) =>
-        if (!found) {
-          val d1 = orient(cx, cy, dx, dy, ax, ay)
-          val d2 = orient(cx, cy, dx, dy, bx, by)
-          val d3 = orient(ax, ay, bx, by, cx, cy)
-          val d4 = orient(ax, ay, bx, by, dx, dy)
-          if (((d1 > 0 && d2 < 0) || (d1 < 0 && d2 > 0)) &&
-              ((d3 > 0 && d4 < 0) || (d3 < 0 && d4 > 0))) found = true
-        }
-      }
-    }
-    found
-  }
-
-  private def foreachSeg(g: Geometry)(f: (Double, Double, Double, Double) => Unit): Unit =
-    g match {
-      case _: Point | _: MultiPoint => ()
-      case gc: GeometryCollection => gc.geoms.foreach(foreachSeg(_)(f))
-      case other => other.foreachSeq { (cs, dim) =>
-        val n = cs.length / dim
-        var i = 1
-        while (i < n) {
-          f(cs((i - 1) * dim), cs((i - 1) * dim + 1), cs(i * dim), cs(i * dim + 1))
-          i += 1
-        }
-      }
-    }
-
-  /** Interiors intersect? (areal: strict-inside probe or proper crossing) */
-  private def interiorsIntersect(a: Geometry, b: Geometry): Boolean = {
-    (a.topoDim, b.topoDim) match {
-      case (0, _) => a match {
-        case p: Point => pointStrictlyInteriorTo(p, b)
-        case mp: MultiPoint => mp.points.exists(p => !p.isEmpty && pointStrictlyInteriorTo(p, b))
-        case _ => false
-      }
-      case (_, 0) => interiorsIntersect(b, a)
-      case (2, 2) =>
-        // areal × areal: probe first (cheap), then decide by overlay area —
-        // robust when every vertex sits on a shared boundary
-        properCrossing(a, b) ||
-          anyVertexStrictlyInside(a, b) || anyVertexStrictlyInside(b, a) || {
-            intersection(a, b) match {
-              case Some(inter) => GeomOps.area(inter) > 0.0
-              case None => false
-            }
-          }
-      case _ =>
-        properCrossing(a, b) ||
-          anyVertexStrictlyInside(a, b) || anyVertexStrictlyInside(b, a)
-    }
-  }
-
-  private def pointStrictlyInteriorTo(p: Point, g: Geometry): Boolean = g.topoDim match {
-    case 2 => pointStrictlyInside(g, p.x, p.y)
-    case 1 => onBoundary(g, p.x, p.y) // interior of a line = line minus endpoints (approx)
-    case 0 => GeomOps.intersects(p, g)
-  }
-
-  /** ST_Touches: geometries intersect but interiors do not. */
-  def touches(a: Geometry, b: Geometry): Boolean =
-    !a.isEmpty && !b.isEmpty && GeomOps.intersects(a, b) && !interiorsIntersect(a, b)
-
-  /** ST_Crosses: interiors intersect, neither contains the other, and the
-    * intersection has lower dimension than the max operand (line/line point
-    * crossing, line/polygon pass-through). */
-  def crosses(a: Geometry, b: Geometry): Boolean = {
-    if (a.isEmpty || b.isEmpty) return false
-    (a.topoDim, b.topoDim) match {
-      case (1, 1) => properCrossing(a, b)
-      case (1, 2) => interiorsIntersect(a, b) && hasVertexOutside(a, b)
-      case (2, 1) => crosses(b, a)
-      case (0, _) | (_, 0) =>
-        GeomOps.intersects(a, b) && !GeomOps.contains(b, a) && !GeomOps.contains(a, b)
-      case _ => false
-    }
-  }
-
-  private def hasVertexOutside(a: Geometry, areal: Geometry): Boolean = {
-    var found = false
-    a.foreachSeq { (cs, dim) =>
-      var i = 0
-      while (!found && i + 1 < cs.length) {
-        val x = cs(i); val y = cs(i + 1)
-        if (!x.isNaN) {
-          val inside = areal match {
-            case pg: Polygon => GeomOps.polygonContainsPoint(pg, x, y)
-            case mpg: MultiPolygon => mpg.polygons.exists(GeomOps.polygonContainsPoint(_, x, y))
-            case _ => false
-          }
-          if (!inside) found = true
-        }
-        i += dim
-      }
-    }
-    found
-  }
-
-  /** ST_Overlaps: same dimension, interiors intersect, neither contains the other. */
-  def overlaps(a: Geometry, b: Geometry): Boolean =
-    !a.isEmpty && !b.isEmpty && a.topoDim == b.topoDim &&
-      interiorsIntersect(a, b) &&
-      !GeomOps.contains(a, b) && !GeomOps.contains(b, a)
-
-  /** ST_IsSimple: no self-intersections (lines), valid ring structure
-    * (polygons); puntal geometries: no repeated points. */
-  def isSimple(g: Geometry): Boolean = g match {
-    case _: Point => true
-    case mp: MultiPoint =>
-      val pts = mp.points.filter(!_.isEmpty).map(p => (p.x, p.y))
-      pts.distinct.length == pts.length
-    case l: LineString => !selfIntersects(l.coords, l.dim)
-    case ml: MultiLineString => ml.lines.forall(l => !selfIntersects(l.coords, l.dim))
-    case pg: Polygon => pg.rings.forall(r => !selfIntersects(r, pg.dim))
-    case mpg: MultiPolygon => mpg.polygons.forall(isSimple)
-    case gc: GeometryCollection => gc.geoms.forall(isSimple)
-  }
-
-  /** O(n²) non-adjacent segment intersection check. */
-  private def selfIntersects(cs: Array[Double], dim: Int): Boolean = {
-    val n = cs.length / dim
-    if (n < 4) return false
-    val closed = cs(0) == cs((n - 1) * dim) && cs(1) == cs((n - 1) * dim + 1)
-    val m = n - 1 // segments
-    var i = 0
-    while (i < m) {
-      var j = i + 2
-      while (j < m) {
-        val adjacentWrap = closed && i == 0 && j == m - 1
-        if (!adjacentWrap) {
-          if (GeomOps.segIntersects(
-            cs(i * dim), cs(i * dim + 1), cs((i + 1) * dim), cs((i + 1) * dim + 1),
-            cs(j * dim), cs(j * dim + 1), cs((j + 1) * dim), cs((j + 1) * dim + 1)))
-            return true
-        }
-        j += 1
-      }
-      i += 1
-    }
-    false
-  }
-
-  /** ST_Boundary: polygon → rings as MultiLineString; line → endpoint
-    * MultiPoint (empty for closed); point → empty collection. */
-  def boundary(g: Geometry): Geometry = g match {
-    case _: Point | _: MultiPoint => GeometryCollection(Array.empty, 2)
-    case l: LineString =>
-      if (l.isEmpty) MultiPoint(Array.empty, 2)
-      else {
-        val n = l.coords.length / l.dim
-        val closed = l.coords(0) == l.coords((n - 1) * l.dim) &&
-          l.coords(1) == l.coords((n - 1) * l.dim + 1)
-        if (closed) MultiPoint(Array.empty, 2)
-        else MultiPoint(Array(
-          Point.xy(l.coords(0), l.coords(1)),
-          Point.xy(l.coords((n - 1) * l.dim), l.coords((n - 1) * l.dim + 1))), 2)
-      }
+      if (pg.isEmpty) factory.createPolygon()
+      else factory.createPolygon(ring(pg.rings(0), pg.dim), pg.rings.tail.map(ring(_, pg.dim)))
+    case mp: MultiPoint => factory.createMultiPoint(mp.points.map(toJts(_).asInstanceOf[jts.Point]))
     case ml: MultiLineString =>
-      val pts = ml.lines.flatMap { l =>
-        boundary(l) match {
-          case mp: MultiPoint => mp.points
-          case _ => Array.empty[Point]
-        }
-      }
-      // mod-2 rule: points appearing an even number of times are not boundary
-      val counted = pts.groupBy(p => (p.x, p.y)).collect {
-        case (_, v) if v.length % 2 == 1 => v.head
-      }
-      MultiPoint(counted.toArray, 2)
-    case pg: Polygon =>
-      MultiLineString(pg.rings.map(r => LineString(r, pg.dim)), pg.dim)
+      factory.createMultiLineString(ml.lines.map(toJts(_).asInstanceOf[jts.LineString]))
     case mpg: MultiPolygon =>
-      MultiLineString(mpg.polygons.flatMap(p => p.rings.map(r => LineString(r, p.dim))), 2)
-    case gc: GeometryCollection =>
-      GeometryCollection(gc.geoms.map(boundary), 2)
+      factory.createMultiPolygon(mpg.polygons.map(toJts(_).asInstanceOf[jts.Polygon]))
+    case gc: GeometryCollection => factory.createGeometryCollection(gc.geoms.map(toJts))
   }
 
-  private def isPolygonal(g: Geometry): Boolean = g match {
-    case _: Polygon | _: MultiPolygon => true
-    case _ => false
-  }
-
-  /** Boundary segments of a polygonal geometry as (x1,y1,x2,y2) quads. */
-  private def polyBoundarySegs(g: Geometry): Array[Array[Double]] = {
-    val segs = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-    def ringSegs(r: Array[Double], dim: Int): Unit = {
-      val n = r.length / dim
-      var i = 0
-      while (i + 1 < n) {
-        segs += Array(r(i * dim), r(i * dim + 1), r((i + 1) * dim), r((i + 1) * dim + 1))
-        i += 1
-      }
-    }
-    g match {
-      case p: Polygon => p.rings.foreach(ringSegs(_, p.dim))
-      case mp: MultiPolygon => mp.polygons.foreach(p => p.rings.foreach(ringSegs(_, p.dim)))
-      case _ =>
-    }
-    segs.toArray
-  }
-
-  /** Exactly collinear segments sharing a positive-length overlap? */
-  private def collinearOverlap(s: Array[Double], t: Array[Double]): Boolean = {
-    val ux = s(2) - s(0); val uy = s(3) - s(1)
-    val c1 = ux * (t(1) - s(1)) - uy * (t(0) - s(0))
-    val c2 = ux * (t(3) - s(1)) - uy * (t(2) - s(0))
-    if (c1 != 0.0 || c2 != 0.0) return false
-    if (math.abs(ux) >= math.abs(uy)) {
-      val lo = math.max(math.min(s(0), s(2)), math.min(t(0), t(2)))
-      val hi = math.min(math.max(s(0), s(2)), math.max(t(0), t(2)))
-      hi > lo
-    } else {
-      val lo = math.max(math.min(s(1), s(3)), math.min(t(1), t(3)))
-      val hi = math.min(math.max(s(1), s(3)), math.max(t(1), t(3)))
-      hi > lo
-    }
-  }
-
-  /** Dimension of boundary(a) ∩ boundary(b) for polygonal inputs:
-    * -1 none, 0 point contact only, 1 collinear overlap. */
-  private def boundaryContactDim(a: Geometry, b: Geometry): Int = {
-    val sa = polyBoundarySegs(a)
-    val sb = polyBoundarySegs(b)
-    var d = -1
+  private def coords(s: jts.CoordinateSequence): Array[Double] = {
+    val out = new Array[Double](s.size * 2)
     var i = 0
-    while (i < sa.length) {
-      val s = sa(i)
-      var j = 0
-      while (j < sb.length) {
-        val t = sb(j)
-        if (collinearOverlap(s, t)) return 1
-        if (d < 0 && GeomOps.segIntersects(s(0), s(1), s(2), s(3), t(0), t(1), t(2), t(3)))
-          d = 0
-        j += 1
-      }
-      i += 1
-    }
-    d
+    while (i < s.size) { out(2 * i) = s.getX(i); out(2 * i + 1) = s.getY(i); i += 1 }
+    out
   }
 
-  /** One connected polygonal component? (single-ring-set Polygon, or a
-    * MultiPolygon wrapper around exactly one.) */
-  private def singlePolygon(g: Geometry): Boolean = g match {
-    case _: Polygon => true
-    case mp: MultiPolygon => mp.polygons.length == 1
-    case _ => false
+  private def polygon(p: jts.Polygon): Polygon =
+    if (p.isEmpty) Polygon(Array.empty, 2)
+    else Polygon(coords(p.getExteriorRing.getCoordinateSequence) +:
+      Array.tabulate(p.getNumInteriorRing)(i => coords(p.getInteriorRingN(i).getCoordinateSequence)), 2)
+
+  private def parts[T](g: jts.Geometry)(f: jts.Geometry => T)(implicit ct: scala.reflect.ClassTag[T]): Array[T] =
+    Array.tabulate(g.getNumGeometries)(i => f(g.getGeometryN(i)))
+
+  private def fromJts(g: jts.Geometry): Geometry = g match {
+    case p: jts.Point => if (p.isEmpty) Point.empty else Point.xy(p.getX, p.getY)
+    case l: jts.LineString => LineString(coords(l.getCoordinateSequence), 2)
+    case p: jts.Polygon => polygon(p)
+    case mp: jts.MultiPoint => MultiPoint(parts(mp)(fromJts(_).asInstanceOf[Point]), 2)
+    case ml: jts.MultiLineString => MultiLineString(parts(ml)(fromJts(_).asInstanceOf[LineString]), 2)
+    case mpg: jts.MultiPolygon => MultiPolygon(parts(mpg)(p => polygon(p.asInstanceOf[jts.Polygon])), 2)
+    case gc: jts.GeometryCollection => GeometryCollection(parts(gc)(fromJts), 2)
   }
 
-  /** Exact DE-9IM for CONNECTED polygon×polygon via the exact predicate
-    * set: the pair's topological class (equal/disjoint/touch/contain/
-    * overlap) plus the boundary-contact dimension pins every matrix cell.
-    * (Connectedness matters: the overlap template fixes IB=BI=1, which a
-    * disconnected operand can violate — see dispatch guard in [[relate]].) */
-  private def relatePolygonal(a: Geometry, b: Geometry): String = {
-    if (equalsGeom(a, b)) return "2FFF1FFF2"
-    if (!GeomOps.intersects(a, b)) return "FF2FF1212"
-    val bb = boundaryContactDim(a, b) match {
-      case -1 => 'F'
-      case 0 => '0'
-      case _ => '1'
-    }
-    if (!interiorsIntersect(a, b)) return s"FF2F${bb}1212" // touches
-    if (GeomOps.contains(a, b)) return s"212F${bb}1FF2"
-    if (GeomOps.contains(b, a)) return s"2FF1${bb}F212"
-    s"2121${bb}1212" // overlap: interiors intersect, neither contains
+  /** Drops collinear node vertices the overlay leaves on straight edges
+    * (Douglas–Peucker at tolerance 0 removes exactly the zero-deviation
+    * vertices; no validity repair). */
+  private def cornersOnly(g: jts.Geometry): jts.Geometry = {
+    val s = new DouglasPeuckerSimplifier(g)
+    s.setDistanceTolerance(0.0)
+    s.setEnsureValid(false)
+    s.getResultGeometry
   }
 
-  /**
-   * ST_Relate: DE-9IM matrix as a 9-char string (I/B/E × I/B/E, values
-   * dimension or F). Polygonal×polygonal pairs dispatch to
-   * [[relatePolygonal]] — exact standard matrices. Mixed/lower-dimension
-   * pairs use predicate probes — exact for the point/line/polygon cases
-   * the probes cover; entries use the standard 'T'-collapse only when
-   * dimension is ambiguous.
-   */
-  def relate(a: Geometry, b: Geometry): String = {
-    if (a.isEmpty || b.isEmpty) {
-      // empties: everything false except EE
-      return "FFFFFFFF2"
+  /** `f`, or `None` when JTS rejects an input (mixed-dimension collection,
+    * malformed ring, or an invalid polygon the overlay cannot node). */
+  private[spatial] def attempt[T](f: => T): Option[T] =
+    try Some(f) catch {
+      case _: IllegalArgumentException | _: jts.TopologyException |
+           _: org.locationtech.jts.util.AssertionFailedException => None
     }
-    // the exact template path assumes CONNECTED polygonal operands: for a
-    // disconnected MultiPolygon (one component inside the other operand,
-    // another disjoint) the overlap template's hardcoded IB=BI=1 cells are
-    // wrong — route multi-component inputs through the probe path
-    if (singlePolygon(a) && singlePolygon(b)) return relatePolygonal(a, b)
-    def dimChar(d: Int): Char = if (d < 0) 'F' else ('0' + d).toChar
-    val ii = if (interiorsIntersect(a, b)) dimChar(math.min(a.topoDim, b.topoDim)) else 'F'
-    val boundsTouch = GeomOps.intersects(a, b) && !interiorsIntersect(a, b)
-    val bb = if (boundsTouch || (GeomOps.intersects(boundary(a), boundary(b)))) '0' else 'F'
-    val ib = if (GeomOps.intersects(a, boundary(b))) dimChar(math.min(a.topoDim, math.max(b.topoDim - 1, 0))) else 'F'
-    val bi = if (GeomOps.intersects(boundary(a), b)) dimChar(math.min(math.max(a.topoDim - 1, 0), b.topoDim)) else 'F'
-    val ie = if (!GeomOps.contains(b, a)) dimChar(a.topoDim) else 'F'
-    val ei = if (!GeomOps.contains(a, b)) dimChar(b.topoDim) else 'F'
-    val be = if (a.topoDim > 0) dimChar(math.max(a.topoDim - 1, 0)) else 'F'
-    val eb = if (b.topoDim > 0) dimChar(math.max(b.topoDim - 1, 0)) else 'F'
-    s"$ii$ib$ie$bi$bb$be$ei$eb" + "2"
+
+  // ---------------------------------------------------------- overlay
+
+  private def overlay(a: Geometry, b: Geometry, op: Int): Option[Geometry] =
+    attempt(fromJts(cornersOnly(OverlayNGRobust.overlay(toJts(a), toJts(b), op))))
+
+  def intersection(a: Geometry, b: Geometry): Option[Geometry] = overlay(a, b, OverlayNG.INTERSECTION)
+  def difference(a: Geometry, b: Geometry): Option[Geometry] = overlay(a, b, OverlayNG.DIFFERENCE)
+  def union(a: Geometry, b: Geometry): Option[Geometry] = overlay(a, b, OverlayNG.UNION)
+  def symDifference(a: Geometry, b: Geometry): Option[Geometry] = overlay(a, b, OverlayNG.SYMDIFFERENCE)
+
+  /** Dissolved union of a whole set (unary union, cascaded over `OverlayNGRobust`). */
+  def unionAll(gs: Seq[Geometry]): Option[Geometry] =
+    attempt(fromJts(cornersOnly(OverlayNGRobust.union(
+      factory.createGeometryCollection(gs.map(toJts).toArray)))))
+
+  /** ST_Buffer with `quadSegs` segments per quarter circle (PostGIS default
+    * 8); negative distances erode areal inputs. */
+  def buffer(g: Geometry, dist: Double, quadSegs: Int = 8): Option[Geometry] =
+    attempt(fromJts(BufferOp.bufferOp(toJts(g), dist, quadSegs)))
+
+  // ------------------------------------------------------- predicates
+  // These throw where JTS rejects an input (e.g. an unclosed ring); the SQL
+  // expressions turn that into NULL through [[attempt]].
+
+  private def holds(a: Geometry, b: Geometry, p: TopologyPredicate): Boolean =
+    RelateNG.relate(toJts(a), toJts(b), p)
+
+  /** ST_Relate: the DE-9IM matrix as a 9-char string. */
+  def relate(a: Geometry, b: Geometry): String = RelateNG.relate(toJts(a), toJts(b)).toString
+  def equalsGeom(a: Geometry, b: Geometry): Boolean = holds(a, b, RelatePredicate.equalsTopo())
+  def touches(a: Geometry, b: Geometry): Boolean = holds(a, b, RelatePredicate.touches())
+  def crosses(a: Geometry, b: Geometry): Boolean = holds(a, b, RelatePredicate.crosses())
+  def overlaps(a: Geometry, b: Geometry): Boolean = holds(a, b, RelatePredicate.overlaps())
+  def isSimple(g: Geometry): Boolean = IsSimpleOp.isSimple(toJts(g))
+
+  /** ST_Boundary; a collection's boundary is the collection of its members'. */
+  def boundary(g: Geometry): Geometry = g match {
+    case gc: GeometryCollection => GeometryCollection(gc.geoms.map(boundary), 2)
+    case _ => fromJts(toJts(g).getBoundary)
   }
 }
 
-/**
- * Minimum enclosing circle (Welzl's move-to-front algorithm, deterministic
- * input order — expected O(n) on typical inputs).
- */
+/** Minimum enclosing circle of all vertices (JTS `MinimumBoundingCircle`). */
 object MinCircle {
-  /** (cx, cy, r) of the smallest circle containing all vertices; None if empty. */
-  def of(g: Geometry): Option[(Double, Double, Double)] = {
-    val pts = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    g.foreachSeq { (cs, dim) =>
-      var i = 0
-      while (i + 1 < cs.length) {
-        if (!cs(i).isNaN) pts += ((cs(i), cs(i + 1)))
-        i += dim
-      }
-    }
-    val uniq = pts.distinct
-    if (uniq.isEmpty) return None
-    var c = (uniq(0)._1, uniq(0)._2, 0.0)
-    var i = 1
-    while (i < uniq.length) {
-      if (!inside(c, uniq(i))) {
-        c = (uniq(i)._1, uniq(i)._2, 0.0)
-        var j = 0
-        while (j < i) {
-          if (!inside(c, uniq(j))) {
-            c = circle2(uniq(i), uniq(j))
-            var k = 0
-            while (k < j) {
-              if (!inside(c, uniq(k))) c = circle3(uniq(i), uniq(j), uniq(k))
-              k += 1
-            }
-          }
-          j += 1
-        }
-      }
-      i += 1
-    }
-    Some(c)
-  }
-
-  private def inside(c: (Double, Double, Double), p: (Double, Double)): Boolean =
-    math.hypot(p._1 - c._1, p._2 - c._2) <= c._3 * (1 + 1e-12) + 1e-12
-
-  private def circle2(a: (Double, Double), b: (Double, Double)): (Double, Double, Double) = {
-    val cx = (a._1 + b._1) / 2
-    val cy = (a._2 + b._2) / 2
-    (cx, cy, math.hypot(a._1 - cx, a._2 - cy))
-  }
-
-  private def circle3(a: (Double, Double), b: (Double, Double),
-                      c: (Double, Double)): (Double, Double, Double) = {
-    val d = 2 * (a._1 * (b._2 - c._2) + b._1 * (c._2 - a._2) + c._1 * (a._2 - b._2))
-    if (d == 0) return circle2(a, if (math.hypot(b._1 - a._1, b._2 - a._2) >
-      math.hypot(c._1 - a._1, c._2 - a._2)) b else c)
-    val a2 = a._1 * a._1 + a._2 * a._2
-    val b2 = b._1 * b._1 + b._2 * b._2
-    val c2 = c._1 * c._1 + c._2 * c._2
-    val ux = (a2 * (b._2 - c._2) + b2 * (c._2 - a._2) + c2 * (a._2 - b._2)) / d
-    val uy = (a2 * (c._1 - b._1) + b2 * (a._1 - c._1) + c2 * (b._1 - a._1)) / d
-    (ux, uy, math.hypot(a._1 - ux, a._2 - uy))
-  }
+  /** (cx, cy, r) of the smallest circle containing all vertices; None if
+    * empty or rejected by JTS. */
+  def of(g: Geometry): Option[(Double, Double, Double)] =
+    GeomSetOps.attempt {
+      val m = new MinimumBoundingCircle(GeomSetOps.toJts(g))
+      Option(m.getCentre).map(c => (c.x, c.y, m.getRadius))
+    }.flatten
 }

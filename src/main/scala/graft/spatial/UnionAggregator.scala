@@ -7,11 +7,12 @@ import org.apache.spark.sql.{Encoder, Encoders}
 case class UnionBuf(items: List[Array[Byte]])
 
 /**
- * ST_Union aggregate: area-dissolved union of all input polygons in a
- * group, built on the piece-overlay engine — each new polygon contributes
- * only its part outside the running union (A ∪ B = A ⊎ (B − A)), so the
- * result is a piecewise-disjoint MultiPolygon whose area equals the true
- * union area.
+ * ST_Union aggregate: the dissolved union of all areal inputs in a group
+ * (JTS unary union through [[GeomSetOps.unionAll]]). Shared edges merge,
+ * so edge-adjacent tiles come back as one Polygon with holes where the
+ * tiles enclose a gap, and disjoint parts as a MultiPolygon. Non-areal
+ * inputs are ignored; a group with no areal input gives MULTIPOLYGON EMPTY,
+ * and one the union cannot node (an invalid polygon) gives NULL.
  *
  * Holistic like collect_list: inputs buffer until `finish` (union is not
  * decomposable into constant-size partial states without a full overlay
@@ -25,32 +26,11 @@ class UnionAggregator extends Aggregator[Array[Byte], UnionBuf, Array[Byte]] {
     if (wkb == null) b else UnionBuf(wkb :: b.items)
   def merge(a: UnionBuf, b: UnionBuf): UnionBuf = UnionBuf(a.items ::: b.items)
   def finish(buf: UnionBuf): Array[Byte] = {
-    var pieces = List.empty[Polygon]
-    buf.items.reverseIterator.foreach { w =>
-      WKB.readOrNull(w) match {
-        case p: Polygon if !p.isEmpty =>
-          pieces = addPolygon(pieces, p)
-        case mp: MultiPolygon =>
-          mp.polygons.foreach(p => if (!p.isEmpty) pieces = addPolygon(pieces, p))
-        case _ => () // non-areal inputs ignored
-      }
-    }
-    WKB.write(MultiPolygon(pieces.toArray, 2))
-  }
-
-  /** Fold one polygon in: its parts outside every existing piece join the set. */
-  private def addPolygon(pieces: List[Polygon], p: Polygon): List[Polygon] = {
-    var remainder: List[Polygon] = List(p)
-    pieces.foreach { existing =>
-      remainder = remainder.flatMap { r =>
-        GeomSetOps.difference(r, existing) match {
-          case Some(mp: MultiPolygon) => mp.polygons.toList
-          case Some(pp: Polygon) if !pp.isEmpty => List(pp)
-          case _ => Nil
-        }
-      }
-    }
-    pieces ++ remainder
+    val areal = buf.items.reverseIterator.map(WKB.readOrNull).collect {
+      case g @ (_: Polygon | _: MultiPolygon) if !g.isEmpty => g
+    }.toSeq
+    if (areal.isEmpty) WKB.write(MultiPolygon(Array.empty, 2))
+    else GeomSetOps.unionAll(areal).map(WKB.write).orNull
   }
 
   def bufferEncoder: Encoder[UnionBuf] = Encoders.product[UnionBuf]

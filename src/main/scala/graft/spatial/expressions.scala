@@ -29,6 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
 object geomutil {
   @inline def fromWkb(v: Any): Geometry = WKB.readOrNull(v.asInstanceOf[Array[Byte]])
   @inline def toWkb(g: Geometry): Array[Byte] = WKB.write(g)
+  /** `v`, or SQL NULL when JTS rejects an operand (see [[GeomSetOps]]). */
+  def orNull(v: => Any): Any = GeomSetOps.attempt(v).orNull
 }
 
 import geomutil._
@@ -685,7 +687,7 @@ object NativeLayout {
 case class StIsSimple(child: Expression) extends GeomUnary {
   override def dataType: DataType = BooleanType
   override def prettyName: String = "st_issimple"
-  override protected def evalGeom(g: Geometry): Any = GeomSetOps.isSimple(g)
+  override protected def evalGeom(g: Geometry): Any = orNull(GeomSetOps.isSimple(g))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -693,35 +695,35 @@ case class StIsSimple(child: Expression) extends GeomUnary {
 case class StBoundary(child: Expression) extends GeomUnary {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "st_boundary"
-  override protected def evalGeom(g: Geometry): Any = toWkb(GeomSetOps.boundary(g))
+  override protected def evalGeom(g: Geometry): Any = orNull(toWkb(GeomSetOps.boundary(g)))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 case class StEquals(left: Expression, right: Expression) extends GeomBinary {
   override def dataType: DataType = BooleanType
   override def prettyName: String = "st_equals"
-  override protected def evalGeoms(a: Geometry, b: Geometry): Any = GeomSetOps.equalsGeom(a, b)
+  override protected def evalGeoms(a: Geometry, b: Geometry): Any = orNull(GeomSetOps.equalsGeom(a, b))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 case class StTouches(left: Expression, right: Expression) extends GeomBinary {
   override def dataType: DataType = BooleanType
   override def prettyName: String = "st_touches"
-  override protected def evalGeoms(a: Geometry, b: Geometry): Any = GeomSetOps.touches(a, b)
+  override protected def evalGeoms(a: Geometry, b: Geometry): Any = orNull(GeomSetOps.touches(a, b))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 case class StCrosses(left: Expression, right: Expression) extends GeomBinary {
   override def dataType: DataType = BooleanType
   override def prettyName: String = "st_crosses"
-  override protected def evalGeoms(a: Geometry, b: Geometry): Any = GeomSetOps.crosses(a, b)
+  override protected def evalGeoms(a: Geometry, b: Geometry): Any = orNull(GeomSetOps.crosses(a, b))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 case class StOverlaps(left: Expression, right: Expression) extends GeomBinary {
   override def dataType: DataType = BooleanType
   override def prettyName: String = "st_overlaps"
-  override protected def evalGeoms(a: Geometry, b: Geometry): Any = GeomSetOps.overlaps(a, b)
+  override protected def evalGeoms(a: Geometry, b: Geometry): Any = orNull(GeomSetOps.overlaps(a, b))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -729,13 +731,13 @@ case class StRelate(left: Expression, right: Expression) extends GeomBinary {
   override def dataType: DataType = StringType
   override def prettyName: String = "st_relate"
   override protected def evalGeoms(a: Geometry, b: Geometry): Any =
-    UTF8String.fromString(GeomSetOps.relate(a, b))
+    orNull(UTF8String.fromString(GeomSetOps.relate(a, b)))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
-/** Set-theoretic ops: null when the operand combination is outside the
-  * supported envelope (see [[GeomSetOps]] scaladoc). */
+/** Set-theoretic ops (JTS overlay): null when JTS rejects an operand
+  * (see [[GeomSetOps]] scaladoc). */
 case class StIntersection(left: Expression, right: Expression) extends GeomBinary {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "st_intersection"
@@ -769,7 +771,7 @@ case class StSymDifference(left: Expression, right: Expression) extends GeomBina
     copy(left = l, right = r)
 }
 
-/** ST_Buffer(geom, dist) — see [[GeomSetOps.buffer]] for the approximation. */
+/** ST_Buffer(geom, dist) — JTS buffer, 8 segments per quarter circle. */
 case class StBuffer(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
   override def dataType: DataType = BinaryType

@@ -128,7 +128,8 @@ object functions {
   lazy val collectUdaf = udaf(new CollectAggregator, org.apache.spark.sql.Encoders.BINARY)
   def st_collect(g: Column): Column = collectUdaf(g)
 
-  /** ST_Union aggregate (area-dissolved union of grouped polygons). */
+  /** ST_Union aggregate: the dissolved union of grouped polygons (shared
+    * edges merged; JTS unary union — see [[UnionAggregator]]). */
   lazy val unionUdaf = udaf(new UnionAggregator, org.apache.spark.sql.Encoders.BINARY)
   def st_union_agg(g: Column): Column = unionUdaf(g)
 

@@ -6,14 +6,16 @@ import org.apache.spark.sql.functions._
 /**
  * The exactly-once discipline shared by every log-structured streaming
  * sink in [[StreamOps]], extracted to one definition: a `foreachBatch`
- * body writes each micro-batch's rows as the batch's OWN partition
- * (`__batch = bid`) with DYNAMIC partition overwrite, and any read of
- * standing state from inside the loop sees only partitions
- * `__batch < bid`. Together these make an at-least-once replay (crash
- * after the write, before the checkpoint commit) invisible:
+ * body writes each micro-batch's rows to a hidden staging dir and
+ * publishes them as the batch's OWN partition (`__batch = bid`) with one
+ * atomic rename ([[write]]), and any read of standing state from inside
+ * the loop sees only partitions `__batch < bid`. Together these make an
+ * at-least-once replay (crash after the write, before the checkpoint
+ * commit) invisible:
  *
- *  - the replayed batch OVERWRITES its own partition with identical
- *    deterministic content instead of appending duplicate rows;
+ *  - the replayed batch REPLACES its own partition (delete, then rename)
+ *    with identical deterministic content instead of appending duplicate
+ *    rows;
  *  - the probe never sees the crashed attempt's half-written partition,
  *    so a batch can never flag/dedup/aggregate against itself
  *    (the failure the flat-append layout produced in
@@ -27,9 +29,16 @@ import org.apache.spark.sql.functions._
  * `subPartitionCols` threads secondary partition columns under
  * `__batch` (e.g. a hash-prefix bucket that lets a standing-index probe
  * prune at the directory level — see
- * [[StreamOps.duplicateSpansStream]]). Dynamic overwrite still keys on
- * the full partition tuple, which stays safe under replay because the
- * batch's content — hence its sub-partition set — is deterministic.
+ * [[StreamOps.duplicateSpansStream]]). They live inside the staging dir
+ * and move with it in the one rename, which stays safe under replay
+ * because the batch's content — hence its sub-partition set — is
+ * deterministic.
+ *
+ * Every filesystem call resolves the log path's OWN scheme ([[fsFor]]),
+ * never the default filesystem. The commit relies on that scheme's
+ * rename being atomic (local, HDFS); on a scheme whose rename is a
+ * copy-then-delete (plain object stores) a reader can see a partially
+ * published batch.
  *
  * == The generation layout (live compaction) ==
  *
@@ -64,8 +73,8 @@ object LogStructuredSink {
     * 256 prefix dirs × 32 shuffle partitions of loose files per trigger
     * is exactly the small-file tax the layout must not introduce.
     *
-    * An EMPTY batch still commits: dynamic overwrite writes no
-    * partition for zero rows, which would leave this log's committed
+    * An EMPTY batch still commits: a zero-row write leaves no parquet
+    * file in the staging dir, which would leave this log's committed
     * frontier ([[maxBatch]]) stuck and gate every
     * [[readCommitted]]-based view to an ever-older snapshot (a healthy
     * stream with no duplicate spans yet read as "nothing committed").
@@ -98,8 +107,7 @@ object LogStructuredSink {
      else clustered.write.partitionBy(subPartitionCols: _*))
       .mode("overwrite").parquet(staging)
     val spark = df.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(spark, path)
     val stagingPath = new org.apache.hadoop.fs.Path(staging)
     // an EMPTY batch writes no parquet file — commit a zero-row,
     // schema-bearing file so the committed frontier advances and a
@@ -121,9 +129,8 @@ object LogStructuredSink {
     }
     // Commit point. A replayed batch (crash after a completed rename,
     // before the checkpoint commit) deletes its earlier attempt's dir
-    // immediately before the rename — the same delete+rename window
-    // dynamic partition overwrite's job commit had, two driver-side
-    // metadata ops, not a whole job with the dir visibly half-written.
+    // immediately before the rename: two driver-side metadata ops, not a
+    // whole job with the dir visibly half-written.
     val targetPath = new org.apache.hadoop.fs.Path(target)
     if (fs.exists(targetPath)) fs.delete(targetPath, true)
     if (!fs.rename(stagingPath, targetPath))
@@ -136,10 +143,14 @@ object LogStructuredSink {
     spark.catalog.refreshByPath(path)
   }
 
+  /** The filesystem of `path`'s own scheme (not the default one). The
+    * commit in [[write]] is atomic only where this filesystem's rename
+    * is. */
+  private def fsFor(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   def exists(spark: SparkSession, path: String): Boolean =
-    org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(path))
+    fsFor(spark, path).exists(new org.apache.hadoop.fs.Path(path))
 
   /** The batch ids present in a log's ROOT partition layout — ONE
     * driver-side `listStatus`, NO Spark job (the point: per-trigger
@@ -150,8 +161,7 @@ object LogStructuredSink {
     * Some(empty) for an existing dir with no `__batch=` partitions.
     * Does NOT account the compacted zone — see [[maxBatch]]. */
   def listBatches(spark: SparkSession, path: String): Option[Seq[Long]] = {
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
     if (!fs.exists(p)) None
     else Some(fs.listStatus(p).toSeq
@@ -181,8 +191,7 @@ object LogStructuredSink {
 
   /** All published generation markers of a log, unsorted. */
   private def markers(spark: SparkSession, path: String): Seq[Gen] = {
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(spark, path)
     val dir = compactDir(path)
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq.filter(_.isFile)
@@ -356,8 +365,7 @@ object LogStructuredSink {
   def withLease[T](spark: SparkSession, logPath: String,
                    staleMs: Long = 600000L, retryMs: Long = 50L,
                    timeoutMs: Long = 600000L)(body: => T): T = {
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(spark, logPath)
     val lease = new org.apache.hadoop.fs.Path(
       logPath.stripSuffix("/") + ".__lease")
     val token = java.util.UUID.randomUUID().toString
@@ -526,8 +534,7 @@ object LogStructuredSink {
           (if (subPartitionCols.isEmpty) clustered.write
            else clustered.write.partitionBy(subPartitionCols: _*))
             .mode("overwrite").parquet(out)
-          val fs = org.apache.hadoop.fs.FileSystem
-            .get(spark.sparkContext.hadoopConfiguration)
+          val fs = fsFor(spark, path)
           val n = footerRowCount(spark, out)
           val m = Gen(gen + 1, foldable.max, System.currentTimeMillis())
           val mOut = fs.create(markerPath(path, m), true)
@@ -543,8 +550,7 @@ object LogStructuredSink {
     * [[compactLive]] for its folded-row-count return value. */
   private def footerRowCount(spark: SparkSession, dir: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(conf)
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+    val it = fsFor(spark, dir).listFiles(new org.apache.hadoop.fs.Path(dir), true)
     var n = 0L
     while (it.hasNext) {
       val f = it.next()
@@ -569,8 +575,7 @@ object LogStructuredSink {
     val expired = ms.filter(g => now - g.at >= retainMs)
     if (expired.isEmpty) return
     val e = expired.maxBy(_.gen)
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(spark, path)
     val sweptRoot = listBatches(spark, path).getOrElse(Seq.empty)
       .filter(_ <= e.stamp)
     sweptRoot.foreach(id => fs.delete(

@@ -580,10 +580,11 @@ object StreamOps {
    * as [[dedupLinesStream]]'s line-key probe.
    *
    * EXACTLY-ONCE via the [[LogStructuredSink]] discipline: spans and
-   * digests partition by batch id with dynamic partition overwrite, the
-   * probe reads only `__batch < bid` — a replayed batch reproduces its
-   * partitions bit-identically instead of double-counting its own
-   * half-written digests (which would flag every replayed position).
+   * digests partition by batch id, each published from a staging dir
+   * with one atomic rename, and the probe reads only `__batch < bid` — a
+   * replayed batch replaces its partitions bit-identically instead of
+   * double-counting its own half-written digests (which would flag every
+   * replayed position).
    *
    * Probe pruning: the digest index sub-partitions on `__pfx` — ONE hex
    * char of `__h` for per-batch partitions (16 dirs: a per-trigger write
@@ -709,9 +710,9 @@ object StreamOps {
    * everything streamed so far.
    *
    * EXACTLY-ONCE via the [[nearDupFlagsStream]] discipline: both the
-   * data and cms logs partition by batch id with dynamic partition
-   * overwrite — a replayed batch reproduces its partitions
-   * bit-identically instead of double-counting its cells.
+   * data and cms logs partition by batch id, each published from a
+   * staging dir with one atomic rename — a replayed batch replaces its
+   * partitions bit-identically instead of double-counting its cells.
    */
   def heavyHittersStream(spark: org.apache.spark.sql.SparkSession,
                          rows: DataFrame, valueCol: String, statePath: String,
@@ -756,9 +757,10 @@ object StreamOps {
 
   /** Exact heavy hitters over everything [[heavyHittersStream]] has
     * committed: merged cell log serves pass 1, the data log is scanned
-    * once for the exact pass. The sink writes the data log BEFORE the
-    * cms log each batch, so a read racing an in-flight trigger could see
-    * data rows whose cells are not yet written (an underestimating
+    * once for the exact pass. The sink commits the data and cms logs
+    * CONCURRENTLY each batch (two independent writes, in either order),
+    * so a read racing an in-flight trigger could see data rows whose
+    * cells are not yet written (an underestimating
     * pass-1 prune that can transiently drop a true heavy hitter) — or,
     * gating only the data side, cells (and the d = −1 total row,
     * inflating the support threshold) whose data rows are excluded.
@@ -826,7 +828,8 @@ object StreamOps {
    * [[graft.pipeline.GroupedTopK]] — map-side bounded, no window) and
    * [[readGroupedTopK]] re-ranks the tiny union. Standing state is
    * never read inside the loop; per-trigger cost is the batch.
-   * Exactly-once via per-batch dynamic partition overwrite. Include a
+   * Exactly-once via per-batch staging-dir write plus atomic rename
+   * ([[LogStructuredSink.write]]). Include a
    * unique key in `order` for deterministic ties (the batch operator's
    * caveat, inherited).
    */

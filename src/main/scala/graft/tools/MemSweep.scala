@@ -17,7 +17,8 @@ import org.apache.spark.sql.SparkSession
   */
 object MemSweep {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/benchdata-sf1p")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      new java.io.File("benchdata-sf1p").getAbsolutePath) // under the working dir
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

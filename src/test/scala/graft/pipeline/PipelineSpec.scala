@@ -250,7 +250,7 @@ class PipelineSpec extends AnyFunSuite {
     val spamBody = (1 to 40).map(i => s"tpl$i").mkString(" ")
     val base = (1 to 80).map(i => s"u$i").mkString(" ")
     val corpus = docs(Seq(5L -> base) ++ (100L until 300L).map(_ -> spamBody))
-    val idxPath = "/tmp/graft_minhash_idx_hot"
+    val idxPath = graft.TestDirs.fresh("graft_minhash_idx_hot")
     Dedup.writeMinhashIndex(corpus, "text", "doc_id", idxPath)
     // batch: one spam copy + one near-dup of the cold corpus doc
     val near = (1 to 80).map(i => if (i == 40) "CHANGED" else s"u$i").mkString(" ")
@@ -660,7 +660,7 @@ class PipelineSpec extends AnyFunSuite {
   test("persisted IVF index: partition-pruned probe matches in-memory ivfTopK") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 5)
-    val path = "/tmp/graft_ivf_index"
+    val path = graft.TestDirs.fresh("graft_ivf_index")
     Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, nLists = 8)
     val indexed = Similarity.ivfTopKIndexed(spark, path, queries, "vec_id", "embedding",
       k = 5, nProbe = 4)
@@ -708,7 +708,7 @@ class PipelineSpec extends AnyFunSuite {
     val base = emb.filter(col("vec_id") % 3 === 0)
     val batch1 = emb.filter(col("vec_id") % 3 === 1)
     val batch2 = emb.filter(col("vec_id") % 3 === 2)
-    val path = "/tmp/graft_ivf_index_incr"
+    val path = graft.TestDirs.fresh("graft_ivf_index_incr")
     Similarity.writeIvfIndex(base, "vec_id", "embedding", path, nLists = 8)
     Similarity.appendIvfIndex(spark, path, batch1, "vec_id", "embedding")
     Similarity.appendIvfIndex(spark, path, batch2, "vec_id", "embedding")
@@ -1068,7 +1068,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("persisted minhash sketch index reproduces in-memory candidate pairs") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val path = "/tmp/graft_minhash_index"
+    val path = graft.TestDirs.fresh("graft_minhash_index")
     Dedup.writeMinhashIndex(docs, "text", "doc_id", path)
     val indexed = Dedup.minhashCandidatePairsIndexed(spark, path)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -1081,7 +1081,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val path = "/tmp/graft_minhash_incr_index"
+    val path = graft.TestDirs.fresh("graft_minhash_incr_index")
     Dedup.writeMinhashIndex(docs, "text", "doc_id", path)
     // the batch: one doc copied verbatim from the corpus + one fresh doc
     val corpusText = docs.filter(col("doc_id") === 7L).head().getString(1)
@@ -1207,7 +1207,7 @@ class PipelineSpec extends AnyFunSuite {
     val batch = all.filter(col("doc_id") >= 300)
     val full = Curate.curate(all, "doc_id", "text", cfg)
     val corpusCurated = Curate.curate(corpus, "doc_id", "text", cfg)
-    val idxPath = "/tmp/graft_curate_incr_idx"
+    val idxPath = graft.TestDirs.fresh("graft_curate_incr_idx")
     Dedup.writeMinhashIndex(corpusCurated.select("doc_id", "text"), "text", "doc_id", idxPath)
     val inc = Curate.curateIncrement(spark, batch, "doc_id", "text", idxPath,
       Some(Curate.shardTokenTotals(corpusCurated)), cfg)
@@ -2078,6 +2078,18 @@ class PipelineSpec extends AnyFunSuite {
       assert(grouped(g) == ((solo.getLong(1), solo.getLong(2),
         solo.getDouble(4))), s"group $g diverges from its solo sketch")
     }
+  }
+
+  test("hll by group: the value column may also be a group column") {
+    import spark.implicits._
+    val rows = Seq(("a", "u-1"), ("a", "u-1"), ("a", "u-2"), ("b", "u-1"))
+      .toDF("g", "k")
+    val est = Stats.hllDistinctByGroup(rows, Seq("g", "k"), "k")
+      .select("g", "k", "distinct_est").as[(String, String, Double)].collect()
+    // one distinct value per (g, k) group
+    assert(est.map(r => (r._1, r._2)).sorted.toSeq ==
+      Seq(("a", "u-1"), ("a", "u-2"), ("b", "u-1")))
+    assert(est.forall(r => math.round(r._3) == 1L), est.toSeq)
   }
 
   test("hll p=16: decimal harmonic sum is exact and order-independent, " +

@@ -30,7 +30,7 @@ class GeoNativeWriteSpec extends AnyFunSuite {
       for ((fix, gclass) <- classes) {
         val src = GeoIO.readGeoParquet(spark,
           s"$dataDir/data-$fix-encoding_wkb.parquet")
-        val out = s"/tmp/graft_native_write_$fix"
+        val out = graft.TestDirs.fresh(s"graft_native_write_$fix")
         GeoIO.writeGeoParquetNative(src, out, Map("geometry" -> gclass))
         val back = GeoIO.readGeoParquet(spark, out)
         val a = src.select(col("col"), G.st_astext(col("geometry")).as("wkt"))
@@ -45,7 +45,7 @@ class GeoNativeWriteSpec extends AnyFunSuite {
   test("written native schema matches the reference native fixtures") {
     ReferenceFixtures.foreachDir { dataDir =>
       for ((fix, gclass) <- classes) {
-        val out = s"/tmp/graft_native_write_schema_$fix"
+        val out = graft.TestDirs.fresh(s"graft_native_write_schema_$fix")
         val src = GeoIO.readGeoParquet(spark,
           s"$dataDir/data-$fix-encoding_wkb.parquet")
         GeoIO.writeGeoParquetNative(src, out, Map("geometry" -> gclass))
@@ -62,7 +62,7 @@ class GeoNativeWriteSpec extends AnyFunSuite {
       for ((fix, gclass) <- classes) {
         val src = GeoIO.readGeoParquet(spark,
           s"$dataDir/data-$fix-encoding_wkb.parquet")
-        val out = s"/tmp/graft_native_write_il_$fix"
+        val out = graft.TestDirs.fresh(s"graft_native_write_il_$fix")
         GeoIO.writeGeoParquetNative(src, out, Map("geometry" -> gclass), interleaved = true)
         // coords are array<double> at the innermost level, not struct
         val dt = spark.read.parquet(out).schema("geometry").dataType.catalogString
@@ -95,7 +95,7 @@ class GeoNativeWriteSpec extends AnyFunSuite {
       import spark.implicits._
       val src = wkts.zipWithIndex.toDF("wkt", "id")
         .select(col("id"), expr("ST_GeomFromText(wkt)").as("geometry"))
-      val out = s"/tmp/graft_native_write_il_xyz_${gclass.toLowerCase}"
+      val out = graft.TestDirs.fresh(s"graft_native_write_il_xyz_${gclass.toLowerCase}")
       GeoIO.writeGeoParquetNative(src, out, Map("geometry" -> gclass),
         interleaved = true, dim = 3)
       val dt = spark.read.parquet(out).schema("geometry").dataType.catalogString
@@ -149,7 +149,7 @@ class GeoNativeWriteSpec extends AnyFunSuite {
       SELECT ST_GeomFromText(CASE WHEN id % 2 = 0 THEN 'POINT (1 2)'
                                   ELSE 'LINESTRING (0 0, 1 1)' END) AS g
       FROM range(4)""")
-    val out = "/tmp/graft_native_write_mismatch"
+    val out = graft.TestDirs.fresh("graft_native_write_mismatch")
     GeoIO.writeGeoParquetNative(mixed, out, Map("g" -> "Point"))
     val back = spark.read.parquet(out)
     assert(back.filter(col("g").isNull).count() == 2)

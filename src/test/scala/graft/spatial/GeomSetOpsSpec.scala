@@ -12,11 +12,6 @@ class GeomSetOpsSpec extends AnyFunSuite {
   val far = poly("POLYGON ((100 100,110 100,110 110,100 110,100 100))")
   val lShape = poly("POLYGON ((0 0,6 0,6 2,2 2,2 6,0 6,0 0))") // non-convex
 
-  test("isConvex") {
-    assert(GeomSetOps.isConvex(sq10))
-    assert(!GeomSetOps.isConvex(lShape))
-  }
-
   test("intersection of overlapping convex squares") {
     val r = GeomSetOps.intersection(sq10, sq5).get
     assert(GeomOps.area(r) == 25.0)
@@ -56,14 +51,6 @@ class GeomSetOpsSpec extends AnyFunSuite {
   test("symDifference area = A + B − 2·A∩B") {
     val s = GeomSetOps.symDifference(sq10, sq5).get
     assert(math.abs(GeomOps.area(s) - 150.0) < 1e-9)
-  }
-
-  test("ear-clipping triangulation partitions the polygon") {
-    val tris = GeomSetOps.triangulate(lShape)
-    assert(tris.length == lShape.rings(0).length / 2 - 1 - 2) // n-2 triangles
-    assert(math.abs(tris.map(GeomOps.area).sum - GeomOps.area(lShape)) < 1e-9)
-    val sq = GeomSetOps.triangulate(sq10)
-    assert(math.abs(sq.map(GeomOps.area).sum - 100.0) < 1e-9)
   }
 
   test("non-convex × non-convex overlay via triangulation") {
@@ -115,10 +102,11 @@ class GeomSetOpsSpec extends AnyFunSuite {
     val mp = WKT.read("MULTIPOINT ((5 5),(50 50))")
     assert(!GeomSetOps.intersection(p, sq10).get.isEmpty)
     assert(GeomSetOps.intersection(WKT.read("POINT (50 50)"), sq10).get.isEmpty)
-    val mpIn = GeomSetOps.intersection(mp, sq10).get.asInstanceOf[MultiPoint]
-    assert(mpIn.points.length == 1)
-    val mpDiff = GeomSetOps.difference(mp, sq10).get.asInstanceOf[MultiPoint]
-    assert(mpDiff.points.length == 1 && mpDiff.points(0).x == 50)
+    // a one-point result is a POINT, as in PostGIS/GEOS
+    val mpIn = GeomSetOps.intersection(mp, sq10).get
+    assert(mpIn.numPoints == 1)
+    val mpDiff = GeomSetOps.difference(mp, sq10).get
+    assert(mpDiff.numPoints == 1 && mpDiff.envelope.xmin == 50)
   }
 
   test("buffer of point: ~circle area, contains center ring") {
@@ -208,8 +196,9 @@ class GeomSetOpsSpec extends AnyFunSuite {
   }
 
   test("boundary") {
+    // a hole-free polygon's boundary is its shell as a LINESTRING (PostGIS)
     assert(WKT.write(GeomSetOps.boundary(sq10)) ==
-      "MULTILINESTRING ((0.0 0.0,10.0 0.0,10.0 10.0,0.0 10.0,0.0 0.0))")
+      "LINESTRING (0.0 0.0,10.0 0.0,10.0 10.0,0.0 10.0,0.0 0.0)")
     assert(WKT.write(GeomSetOps.boundary(WKT.read("LINESTRING (0 0,5 5)"))) ==
       "MULTIPOINT ((0.0 0.0),(5.0 5.0))")
     assert(GeomSetOps.boundary(WKT.read("POINT (1 1)")).isEmpty)
@@ -247,6 +236,11 @@ class GeomSetOpsSpec extends AnyFunSuite {
   // ------------------------------------------------------------- dissolve
 
   private def perimeter(g: Geometry): Double = GeomOps.perimeter(g)
+
+  private def unionAgg(polys: Geometry*): Geometry = {
+    val agg = new UnionAggregator
+    WKB.read(agg.finish(polys.foldLeft(agg.zero)((b, p) => agg.reduce(b, WKB.write(p)))))
+  }
 
   test("union of edge-adjacent squares dissolves to ONE polygon, shared edge gone") {
     val a = poly("POLYGON ((0 0,2 0,2 2,0 2,0 0))")
@@ -299,7 +293,7 @@ class GeomSetOpsSpec extends AnyFunSuite {
       poly("POLYGON ((2 0,3 0,3 3,2 3,2 0))"),   // right
       poly("POLYGON ((1 0,2 0,2 1,1 1,1 0))"),   // bottom middle
       poly("POLYGON ((1 2,2 2,2 3,1 3,1 2))"))   // top middle
-    val d = GeomSetOps.dissolve(tiles)
+    val d = unionAgg(tiles.toIndexedSeq: _*)
     val pg = d match {
       case p: Polygon => p
       case other => fail(s"expected Polygon, got ${other.typeName}: ${WKT.write(other)}")
@@ -310,9 +304,9 @@ class GeomSetOpsSpec extends AnyFunSuite {
   }
 
   test("dissolve keeps genuinely disjoint pieces apart") {
-    val d = GeomSetOps.dissolve(Array(
+    val d = unionAgg(
       poly("POLYGON ((0 0,1 0,1 1,0 1,0 0))"),
-      poly("POLYGON ((5 5,6 5,6 6,5 6,5 5))")))
+      poly("POLYGON ((5 5,6 5,6 6,5 6,5 5))"))
     assert(d.isInstanceOf[MultiPolygon], d.typeName)
     assert(GeomOps.area(d) == 2.0)
     assert(perimeter(d) == 8.0)
@@ -327,10 +321,48 @@ class GeomSetOpsSpec extends AnyFunSuite {
       ("POLYGON ((0 0,2 0,2 2,0 2,0 0))", "POLYGON ((1 0,3 0,3 2,1 2,1 0))", 6.0, 10.0),
       ("POLYGON ((0 0,2 0,2 2,0 2,0 0))", "POLYGON ((2 0,4 0,4 1,2 1,2 0))", 6.0, 12.0),
       ("POLYGON ((0 0,2 0,2 2,0 2,0 0))", "POLYGON ((0 2,2 2,2 4,0 4,0 2))", 8.0, 12.0))
-    for ((wa, wb, area, perim) <- cases) {
-      val u = GeomSetOps.union(poly(wa), poly(wb)).get
+    for ((wa, wb, area, perim) <- cases;
+         u <- Seq(GeomSetOps.union(poly(wa), poly(wb)).get, unionAgg(poly(wa), poly(wb)))) {
       assert(GeomOps.area(u) == area, s"$wa u $wb")
       assert(perimeter(u) == perim, s"$wa u $wb -> ${WKT.write(u)}")
     }
+  }
+
+  // -------------------------------------------- regressions (JTS overlay)
+
+  test("buffer of a polygon is one dissolved region (area 35.12, not 60.49)") {
+    val b = GeomSetOps.buffer(poly("POLYGON ((0 0,4 0,4 4,0 4,0 0))"), 1.0).get
+    assert(b.isInstanceOf[Polygon], b.typeName)
+    // 16 + 4·4 sides + a 32-gon's quarter-circle corners (≈ π)
+    assert(math.abs(GeomOps.area(b) - 35.12) < 0.01, GeomOps.area(b))
+  }
+
+  test("buffer of a bent line does not count the elbow twice (area 42.90)") {
+    val b = GeomSetOps.buffer(WKT.read("LINESTRING (0 0,10 0,10 10)"), 1.0).get
+    assert(b.isInstanceOf[Polygon], b.typeName)
+    assert(math.abs(GeomOps.area(b) - 42.90) < 0.01, GeomOps.area(b))
+  }
+
+  test("st_union_agg of two edge-sharing squares is one Polygon of perimeter 12") {
+    val u = unionAgg(
+      poly("POLYGON ((0 0,2 0,2 2,0 2,0 0))"), poly("POLYGON ((2 0,4 0,4 2,2 2,2 0))"))
+    assert(u.isInstanceOf[Polygon], WKT.write(u))
+    assert(GeomOps.area(u) == 8.0)
+    assert(perimeter(u) == 12.0)
+    assert(u.numPoints == 5, WKT.write(u))
+  }
+
+  test("line-line intersection is their crossing point") {
+    val r = GeomSetOps.intersection(
+      WKT.read("LINESTRING (0 0,2 0)"), WKT.read("LINESTRING (1 -1,1 1)")).get
+    assert(WKT.write(r) == "POINT (1.0 0.0)")
+  }
+
+  test("operands JTS rejects give None, not an exception") {
+    val bowtie = poly("POLYGON ((0 0,10 10,10 0,0 10,0 0))")
+    assert(GeomSetOps.intersection(bowtie, sq10).isEmpty)
+    val mixed = WKT.read("GEOMETRYCOLLECTION (POINT (1 1),POLYGON ((0 0,1 0,1 1,0 0)))")
+    assert(GeomSetOps.intersection(mixed, sq10).isEmpty)
+    assert(GeomSetOps.union(sq10, mixed).isEmpty)
   }
 }

@@ -288,9 +288,9 @@ class GeometryCoreSpec extends AnyFunSuite {
     val b2 = agg.reduce(agg.zero, WKB.write(Point.xy(10, -5)))
     val m = agg.merge(b1, b2)
     val ext = agg.finish(m)
-    assert(ext == Extent(0, -5, 10, 5))
-    // empty + null inputs ignored; all-empty → null
+    assert(ext == Some(Extent(0, -5, 10, 5)))
+    // empty + null inputs ignored; all-empty → None (a NULL extent in SQL)
     val e = agg.reduce(agg.reduce(agg.zero, null), WKB.write(Point.empty))
-    assert(agg.finish(e) == null)
+    assert(agg.finish(e).isEmpty)
   }
 }

@@ -129,8 +129,8 @@ object GeometryPropSpec extends Properties("geometry") {
     val ext = agg.finish(buf)
     val manual = new Envelope
     gs.foreach(_.foldEnvelope(manual))
-    if (manual.isEmpty) ext == null
-    else ext == Extent(manual.xmin, manual.ymin, manual.xmax, manual.ymax)
+    if (manual.isEmpty) ext.isEmpty
+    else ext == Some(Extent(manual.xmin, manual.ymin, manual.xmax, manual.ymax))
   }
 
   property("extent merge is order-independent (the reference's merge bug)") =
@@ -175,11 +175,6 @@ object GeometryPropSpec extends Properties("geometry") {
       }
       Polygon(Array((pts :+ pts.head).flatMap(p => Seq(p._1, p._2)).toArray), 2)
     }
-
-  property("triangulation partitions area") = forAll(genStarPolygon) { pg =>
-    val tris = GeomSetOps.triangulate(pg)
-    math.abs(tris.map(GeomOps.area).sum - GeomOps.area(pg)) < 1e-6 * math.max(1.0, GeomOps.area(pg))
-  }
 
   property("overlay area identities on non-convex pairs") =
     forAll(genStarPolygon, genStarPolygon) { (a, b) =>

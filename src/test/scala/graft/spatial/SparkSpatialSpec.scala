@@ -129,7 +129,7 @@ class SparkSpatialSpec extends AnyFunSuite {
   test("geoparquet write roundtrip preserves geometry metadata + content") {
     ReferenceFixtures.foreachDir { dataDir =>
       val df = GeoIO.readGeoParquet(spark, s"$dataDir/data-polygon-encoding_native.parquet")
-      val out = "/tmp/graft_geo_roundtrip"
+      val out = graft.TestDirs.fresh("graft_geo_roundtrip")
       GeoIO.writeGeoParquet(df, out, Map("geometry" -> "Polygon"))
       val back = spark.read.parquet(out)
       assert(back.schema("geometry").metadata.getString("encoding") == "WKB")
@@ -293,5 +293,44 @@ class SparkSpatialSpec extends AnyFunSuite {
     assert(r.getBoolean(6))
     assert(r.getString(7) == "ezs42")
     assert(r.getString(8) == "LINESTRING (0.0 0.0,1.0 1.0)")
+  }
+
+  test("st_extent UDAF: a group of only NULL and EMPTY geometries gets a NULL extent") {
+    import spark.implicits._
+    Seq(("a", "POINT (1 2)"), ("a", "POINT (3 -4)"),
+        ("b", null), ("b", "POINT EMPTY"), ("b", "POLYGON EMPTY"))
+      .toDF("t", "wkt").selectExpr("t", "ST_GeomFromText(wkt) AS geometry")
+      .createOrReplaceTempView("extent_groups")
+    val df = spark.sql(
+      "SELECT t, st_extent(geometry) AS e FROM extent_groups GROUP BY t ORDER BY t")
+    assert(df.schema("e").dataType.catalogString ==
+      "struct<xmin:double,ymin:double,xmax:double,ymax:double>")
+    val rows = df.collect()
+    assert(rows.map(_.getString(0)).toSeq == Seq("a", "b"))
+    val e = rows(0).getStruct(1)
+    assert(Seq(e.getDouble(0), e.getDouble(1), e.getDouble(2), e.getDouble(3)) ==
+      Seq(1.0, -4.0, 3.0, 2.0))
+    assert(rows(1).isNullAt(1))
+  }
+
+  test("JTS overlay through SQL: dissolved buffer, line crossing, NULL on a bowtie") {
+    val r = spark.sql("""
+      SELECT ST_Area(ST_Buffer(ST_GeomFromText('POLYGON ((0 0,4 0,4 4,0 4,0 0))'), 1.0D)),
+             ST_AsText(ST_Intersection(ST_GeomFromText('LINESTRING (0 0,2 0)'),
+                                       ST_GeomFromText('LINESTRING (1 -1,1 1)'))),
+             ST_Intersection(ST_GeomFromText('POLYGON ((0 0,10 10,10 0,0 10,0 0))'),
+                             ST_GeomFromText('POLYGON ((0 0,10 0,10 10,0 10,0 0))')),
+             ST_Touches(ST_GeomFromText('POLYGON ((0 0,1 0,1 1))'),
+                        ST_GeomFromText('POINT (0 0)'))""").head()
+    assert(math.abs(r.getDouble(0) - 35.12) < 0.01, r.getDouble(0))
+    assert(r.getString(1) == "POINT (1.0 0.0)")
+    assert(r.isNullAt(2))
+    assert(r.isNullAt(3)) // an unclosed ring: a predicate gives NULL, not a failed query
+    val u = spark.sql("""
+      SELECT ST_GeometryType(u), ST_Perimeter(u) FROM (
+        SELECT st_union_agg(g) AS u FROM VALUES
+          (ST_GeomFromText('POLYGON ((0 0,2 0,2 2,0 2,0 0))')),
+          (ST_GeomFromText('POLYGON ((2 0,4 0,4 2,2 2,2 0))')) AS v(g))""").head()
+    assert(u.getString(0) == "ST_Polygon" && u.getDouble(1) == 12.0)
   }
 }

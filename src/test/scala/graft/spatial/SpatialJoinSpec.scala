@@ -165,7 +165,7 @@ class SpatialJoinSpec extends AnyFunSuite {
     val cust = spark.read.parquet(s"$sf/customer.parquet")
       .select(col("c_custkey"),
         G.st_point(col("c_acctbal"), col("c_nationkey").cast("double")).as("pt"))
-    val out = "/tmp/graft_bbox_covered"
+    val out = graft.TestDirs.fresh("graft_bbox_covered")
     GeoIO.withBboxColumn(cust, "pt").write.mode("overwrite").parquet(out)
 
     val back = spark.read.parquet(out)
@@ -188,7 +188,7 @@ class SpatialJoinSpec extends AnyFunSuite {
     val cust = spark.read.parquet(s"$sf/customer.parquet")
       .select(col("c_custkey"),
         G.st_point(col("c_acctbal"), col("c_nationkey").cast("double")).as("pt"))
-    val out = "/tmp/graft_cell_partitioned"
+    val out = graft.TestDirs.fresh("graft_cell_partitioned")
     GeoIO.writePartitionedByCell(cust, "pt", 1000.0, out)
 
     // query window: x ∈ [0, 2500], y ∈ [0, 12]

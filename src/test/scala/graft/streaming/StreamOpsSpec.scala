@@ -103,7 +103,7 @@ class StreamOpsSpec extends AnyFunSuite {
       (2L, "completely different content about spark query planning and shuffles here"),
       (3L, "a third document mentioning grid cells and spatial joins at scale"))
       .toDF("doc_id", "text")
-    val idx = "/tmp/graft_stream_minhash_idx"
+    val idx = graft.TestDirs.fresh("graft_stream_minhash_idx")
     graft.pipeline.Dedup.writeMinhashIndex(corpus, "text", "doc_id", idx)
     val input = MemoryStream[(Long, String)]
     val stream = input.toDF().toDF("doc_id", "text")
@@ -260,12 +260,10 @@ class StreamOpsSpec extends AnyFunSuite {
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river bank today"))
       .toDF("doc_id", "text")
-    val idx = "/tmp/graft_stream_curate_idx"
+    val idx = graft.TestDirs.fresh("graft_stream_curate_idx")
     graft.pipeline.Dedup.writeMinhashIndex(corpus, "text", "doc_id", idx)
-    val out = "/tmp/graft_stream_curate_out"
-    val ckpt = "/tmp/graft_stream_curate_ckpt"
-    Seq(out, ckpt).foreach(p =>
-      new scala.reflect.io.Directory(new java.io.File(p)).deleteRecursively())
+    val out = graft.TestDirs.fresh("graft_stream_curate_out")
+    val ckpt = graft.TestDirs.fresh("graft_stream_curate_ckpt")
     val input = MemoryStream[(Long, String)]
     val stream = input.toDF().toDF("doc_id", "text")
     val cfg = graft.pipeline.Curate.Config(minQuality = 0.2, shards = 1)
@@ -298,11 +296,9 @@ class StreamOpsSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val standing = Seq((1L, "standing boilerplate line\nstanding unique line"))
       .toDF("doc_id", "text")
-    val idx = "/tmp/graft_stream_lidx"
-    val out = "/tmp/graft_stream_lidx_out"
-    val ckpt = "/tmp/graft_stream_lidx_ckpt"
-    Seq(idx, out, ckpt).foreach(p =>
-      new scala.reflect.io.Directory(new java.io.File(p)).deleteRecursively())
+    val idx = graft.TestDirs.fresh("graft_stream_lidx")
+    val out = graft.TestDirs.fresh("graft_stream_lidx_out")
+    val ckpt = graft.TestDirs.fresh("graft_stream_lidx_ckpt")
     graft.pipeline.Dedup.writeLineIndex(standing, "text", "doc_id", idx,
       "\n", minChars = 4)
     val input = MemoryStream[(Long, String)]
