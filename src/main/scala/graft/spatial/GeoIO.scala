@@ -1,13 +1,14 @@
 package graft.spatial
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.GraftShim
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, struct}
-import org.apache.spark.sql.types.MetadataBuilder
+import org.apache.spark.sql.types.{MetadataBuilder, StructType}
 
 /**
  * GeoParquet ingestion.
@@ -17,9 +18,21 @@ import org.apache.spark.sql.types.MetadataBuilder
  * and a plan rule that threads `geo` metadata into every ST_* call
  * (reference: src/rules.rs:20-170). Spark drops parquet footer key-value
  * metadata from `spark.read.parquet` schemas, so we read the footer
- * ourselves via parquet-hadoop (ships with Spark) and convert any
- * GeoArrow-native geometry columns to canonical WKB at load — after which
- * no metadata threading is needed anywhere in the plan.
+ * ourselves and convert any GeoArrow-native geometry columns to canonical
+ * WKB at load — after which no metadata threading is needed anywhere in
+ * the plan.
+ *
+ * Opening a path ([[readGeoParquet]], [[readGeoParquetFiltered]],
+ * [[readGeoMetadata]]) reads ONE footer and starts no Spark job. The
+ * footer is that of the first visible data file in path order — the file
+ * Spark's own non-merging schema inference would pick: names starting
+ * with `_` or `.` are skipped at every directory level, as Spark's file
+ * index skips them. Both the `geo` document and the Spark schema come from
+ * that footer, and the schema is handed to the parquet reader, so the
+ * inference job Spark would otherwise run is never started. Spark still
+ * infers the schema itself where one footer cannot give it: when
+ * `spark.sql.parquet.mergeSchema` is on, or when the directory holds
+ * `_metadata`/`_common_metadata` summary files.
  *
  * The `geo` JSON shape (reference: data/generate_test_data.py:26-35):
  * {"version":"1.1.0","primary_column":"geometry",
@@ -90,22 +103,63 @@ object GeoIO {
     }
   }
 
-  /** Read the `geo` key-value metadata from the first parquet footer under `path`. */
-  def readGeoMetadata(spark: SparkSession, path: String): Seq[GeoColumn] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val file =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).map(_.getPath).find(_.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalArgumentException(s"no parquet files under $path"))
-      else p
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      val kv = reader.getFooter.getFileMetaData.getKeyValueMetaData
-      Option(kv.get("geo")).map(parseGeoJson).getOrElse(Seq.empty)
-    } finally reader.close()
+  /** What one open of a path read off its one footer: the `geo` columns,
+    * and the reader over the path. `schema` is the footer's Spark schema,
+    * or None where Spark's own inference has to run (see [[open]]). */
+  private final class Opened(spark: SparkSession, path: String,
+                             val footerGeo: Seq[GeoColumn], schema: Option[StructType]) {
+    /** Building it starts no Spark job when `schema` is set. */
+    lazy val frame: DataFrame =
+      schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
   }
+
+  /** Open `path`: pick the first visible data file in path order (Spark's
+    * non-merging inference picks the same one), read its footer once, and
+    * take from it both the `geo` document and the Spark schema. The schema
+    * is converted the way Spark's inference converts it: Spark's own
+    * row-metadata key wins when present, else the parquet schema goes
+    * through a converter built from the session's SQLConf (binaryAsString,
+    * INT96, …). With `spark.sql.parquet.mergeSchema` on, or summary files
+    * present, one footer cannot give the right schema, so the schema is
+    * left to Spark's inference. */
+  private def open(spark: SparkSession, path: String): Opened = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val (summaries, data) = leafFiles(fs, fs.getFileStatus(root))
+      .sortBy(_.getPath.toString)
+      .partition(f => isSummaryFile(f.getPath.getName))
+    val first = data.headOption
+      .getOrElse(throw new IllegalArgumentException(s"no parquet files under $path"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(first, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val geo = Option(footer.getFileMetaData.getKeyValueMetaData.get("geo"))
+      .map(parseGeoJson).getOrElse(Seq.empty)
+    val sqlConf = spark.sessionState.conf
+    val schema =
+      if (sqlConf.isParquetSchemaMergingEnabled || summaries.nonEmpty) None
+      else Some(ParquetFileFormat.readSchemaFromFooter(
+        new Footer(first.getPath, footer), new ParquetToSparkSchemaConverter(sqlConf)))
+    new Opened(spark, path, geo, schema)
+  }
+
+  /** The files under `st`, recursively, without the hidden names Spark's
+    * file index skips. */
+  private def leafFiles(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+    if (!st.isDirectory) Seq(st)
+    else fs.listStatus(st.getPath).toSeq
+      .filterNot(c => GraftShim.hiddenFromFileIndex(c.getPath.getName))
+      .flatMap(leafFiles(fs, _))
+
+  private def isSummaryFile(name: String): Boolean =
+    name == ParquetFileWriter.PARQUET_METADATA_FILE ||
+      name == ParquetFileWriter.PARQUET_COMMON_METADATA_FILE
+
+  /** The `geo` key-value metadata of the footer [[readGeoParquet]] would
+    * read for `path`: one footer read, no Spark job (see [[GeoIO]]). Empty
+    * when that footer has no `geo` key. */
+  def readGeoMetadata(spark: SparkSession, path: String): Seq[GeoColumn] =
+    open(spark, path).footerGeo
 
   /**
    * Write a DataFrame whose geometry columns are WKB `BinaryType`, recording
@@ -334,18 +388,28 @@ object GeoIO {
   }
 
   /**
-   * Read a (Geo)Parquet file; geometry columns become WKB `BinaryType`
-   * with `{encoding, geometryType}` recorded as column metadata. WKB-encoded
-   * columns pass through; GeoArrow-native nested columns are converted by
-   * [[StNativeAsWkb]]. Plain parquet (no `geo` footer) reads unchanged.
+   * Read a (Geo)Parquet file or directory; geometry columns become WKB
+   * `BinaryType` with `{encoding, sourceEncoding, geometryType, crs}`
+   * recorded as column metadata. WKB-encoded columns pass through;
+   * GeoArrow-native nested columns are converted by [[StNativeAsWkb]].
+   * Plain parquet (no `geo` footer) reads unchanged.
+   *
+   * One footer read, and no Spark job until the frame is used: the schema
+   * and the `geo` document both come from the first visible data file's
+   * footer (see [[GeoIO]] for the file and for when Spark's inference
+   * still runs). Without a `geo` key, the geometry columns are those
+   * whose field metadata names a native encoding, the carrier used by
+   * this engine's own writers.
    */
-  def readGeoParquet(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    // `geo` footer key first (GeoParquet interop); fall back to Spark field
-    // metadata, the carrier used by this engine's own native/WKB writers
-    val footerCols = readGeoMetadata(spark, path)
+  def readGeoParquet(spark: SparkSession, path: String): DataFrame =
+    decode(open(spark, path))
+
+  /** The opened frame with its geometry columns decoded to WKB: the `geo`
+    * footer's columns, else those named by field metadata. */
+  private def decode(opened: Opened): DataFrame = {
+    val df = opened.frame
     val geoCols =
-      if (footerCols.nonEmpty) footerCols
+      if (opened.footerGeo.nonEmpty) opened.footerGeo
       else df.schema.fields.toSeq.collect {
         case f if f.metadata.contains("encoding") && f.metadata.contains("geometryType") &&
             !f.metadata.getString("encoding").equalsIgnoreCase("WKB") =>
@@ -385,20 +449,21 @@ object GeoIO {
    * groups skip on stats, zero geometry decode for misses); the exact
    * envelope-intersection residual then runs only on survivors. Without a
    * covering, the exact test alone applies — same results, no pruning.
+   * Opens the path once, as [[readGeoParquet]] does.
    */
   def readGeoParquetFiltered(spark: SparkSession, path: String,
                              xmin: Double, ymin: Double,
                              xmax: Double, ymax: Double): DataFrame = {
     import graft.spatial.{functions => G}
-    val df = readGeoParquet(spark, path)
-    val footerCols = readGeoMetadata(spark, path)
-    val geomName = footerCols.headOption.map(_.name)
+    val opened = open(spark, path)
+    val df = decode(opened)
+    val geomName = opened.footerGeo.headOption.map(_.name)
       .orElse(df.schema.fields.find(_.metadata.contains("geometryType")).map(_.name))
       .getOrElse(throw new IllegalArgumentException(s"no geometry column under $path"))
     val g = col(geomName)
     val exact = G.st_xmin(g) <= xmax && G.st_xmax(g) >= xmin &&
       G.st_ymin(g) <= ymax && G.st_ymax(g) >= ymin
-    footerCols.headOption.flatMap(_.coveringBbox) match {
+    opened.footerGeo.headOption.flatMap(_.coveringBbox) match {
       case Some(bb) => df.filter(bboxFilter(bb, xmin, ymin, xmax, ymax) && exact)
       case None => df.filter(exact)
     }

@@ -18,7 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
  *
  * Sources of plan-time knowledge, in order:
  *  1. attribute metadata — [[GeoIO.readGeoParquet]] records
- *     {encoding, geometryType} on every geometry column it loads;
+ *     {encoding, sourceEncoding, geometryType, crs} on every geometry
+ *     column it loads, from the one footer it reads at open;
  *  2. lineage — when an operation strips field metadata (CASE/COALESCE
  *     wrappers, re-aliasing, a view over a transformed frame), the rule
  *     walks alias chains and class-preserving expressions in the plan

@@ -17,4 +17,10 @@ object GraftShim {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Whether Spark's file index skips a file or directory of this name
+    * (`_`/`.`-prefixed, except summary files) — `HadoopFSUtils` is
+    * private[spark]. */
+  def hiddenFromFileIndex(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }
